@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Merge-on-read keyed table: the O(batch) upsert path that replaces the
   * facade's default copy-on-write snapshot at scale (the "100 TB
@@ -56,11 +57,45 @@ import org.apache.spark.sql.functions._
   * safety is explicitly out of scope there too, `README.md:174`);
   * versions are allocated from the directory listing plus the fold
   * ceiling.
+  *
+  * Schema memo: every read of a file goes through [[readFile]], which
+  * infers the file's schema once per instance (a one-task Spark job per
+  * `spark.read.parquet`) and reads it again through
+  * `spark.read.schema(s)`, which submits no job. A file is never
+  * rewritten under its name — generations and deltas are created new,
+  * and a fold commits by renaming to a fresh name — except an orphan
+  * delta version: [[truncateAbove]] deletes it and the next commit
+  * writes that version again. So [[truncateAbove]] and [[gc]] drop the
+  * entries of the files they delete. A merged read therefore costs the
+  * same number of jobs however many pending deltas it has already read.
   */
 class MorTable(spark: SparkSession, dir: String, keyCol: String) {
 
   private def fs: FileSystem =
     FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+
+  /** Schema Spark inferred from each file this instance has read, by
+    * path. Only ever filled from the file itself: a writer's DataFrame
+    * may declare columns non-nullable, but tombstone rows are null in
+    * every non-key column.
+    */
+  private val fileSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  private def fileSchema(p: Path): StructType =
+    fileSchemas.computeIfAbsent(p.toString, f => spark.read.parquet(f).schema)
+
+  /** The one way this table reads a base or delta file (see the schema
+    * memo in the class doc).
+    */
+  private def readFile(p: Path): DataFrame =
+    spark.read.schema(fileSchema(p)).parquet(p.toString)
+
+  /** Delete a base or delta file and forget its schema. */
+  private def deleteFile(p: Path): Unit = {
+    fs.delete(p, true)
+    fileSchemas.remove(p.toString)
+  }
 
   private def legacyBasePath = new Path(s"$dir/base.parquet")
   private def legacyOldPath = new Path(s"$dir/base.parquet.old")
@@ -187,7 +222,7 @@ class MorTable(spark: SparkSession, dir: String, keyCol: String) {
     require(baseOpt.nonEmpty || deltaDfs.nonEmpty,
       s"MOR table $dir has no file set covering version $maxV " +
         "(was a pinned ceiling's generation GC'd after its pin closed?)")
-    val baseDf = baseOpt.map { case (_, p) => spark.read.parquet(p.toString) }
+    val baseDf = baseOpt.map { case (_, p) => readFile(p) }
     if (deltaDfs.isEmpty) return baseDf.get
     // Merge plan, sized for a base that dwarfs the deltas (the regime
     // compaction maintains): last-writer-wins is resolved by a window
@@ -248,7 +283,7 @@ class MorTable(spark: SparkSession, dir: String, keyCol: String) {
     val deltaDfs = windowDeltaDfs(floor, maxV)
     val idsOnly = ids.select(keyCol)
     val baseHits = baseOpt.map { case (_, p) =>
-      spark.read.parquet(p.toString).select(keyCol)
+      readFile(p).select(keyCol)
         .join(org.apache.spark.sql.functions.broadcast(idsOnly), Seq(keyCol), "left_semi")
     }
     if (deltaDfs.isEmpty)
@@ -341,7 +376,7 @@ class MorTable(spark: SparkSession, dir: String, keyCol: String) {
     deltaPaths()
       .filter { case (v, _) => v > floorExclusive && v <= ceiling }
       .map { case (v, p) =>
-        val df = spark.read.parquet(p.toString)
+        val df = readFile(p)
         (if (df.columns.contains("_deleted")) df
          else df.withColumn("_deleted", lit(false)))
           .withColumn("_v", lit(v))
@@ -354,11 +389,17 @@ class MorTable(spark: SparkSession, dir: String, keyCol: String) {
     math.max(foldCeiling(), deltaPaths().lastOption.map(_._1).getOrElse(0))
 
   /** Append-only upsert: writes ONLY the batch (last-writer-wins
-    * replaces any older rows with the same key at read time). Keys must
-    * be unique within a batch. Returns the delta's commit version — the
-    * facade records it in the folder's `_committed` ceilings AFTER both
-    * tiers land, which is what makes the commit visible (see
-    * [[graft.db.VectorDB]]'s MOR commit protocol).
+    * replaces any older rows with the same key at read time). Returns
+    * the delta's commit version — the facade records it in the folder's
+    * `_committed` ceilings AFTER both tiers land, which is what makes
+    * the commit visible (see [[graft.db.VectorDB]]'s MOR commit
+    * protocol).
+    *
+    * Precondition: keys are unique within `rows`. The single-delta read
+    * path skips the last-writer-wins window on that assumption
+    * ([[readAt]]); it is the caller's to guarantee (the facade validates
+    * each batch) and is not checked here, as a check would add a Spark
+    * job to every commit.
     */
   def upsert(rows: DataFrame): Int = {
     val v = nextVersion()
@@ -367,14 +408,29 @@ class MorTable(spark: SparkSession, dir: String, keyCol: String) {
     v
   }
 
-  /** Append-only delete: writes key-only tombstone markers. Returns the
-    * delta's commit version (see [[upsert]]).
+  /** Append-only delete: writes tombstone markers for `ids` (a
+    * single-column relation on [[keyCol]]) and returns the delta's
+    * commit version (see [[upsert]]). Unlike an upsert's rows, `ids` may
+    * repeat a key: every tombstone of a key resolves to "deleted", so
+    * the single-delta read path needs no uniqueness here.
+    *
+    * A tombstone carries every column of the table's newest file (a
+    * pending delta, else the live generation), null, so a later merged
+    * read can union it with any file of the table. Those columns come
+    * from that file's memoized schema: no read of the table is planned,
+    * and the only job besides the write is the schema's inference if
+    * this instance has not read the file yet. A table with no file yet
+    * has no live key; its tombstones carry the key alone.
     */
-  def delete(ids: DataFrame, template: DataFrame): Int = {
+  def delete(ids: DataFrame): Int = {
     val v = nextVersion()
-    val nullCols = template.schema.fields.filter(_.name != keyCol).map(f =>
-      lit(null).cast(f.dataType).as(f.name))
-    ids.select((col(keyCol) +: nullCols.toSeq) :+ lit(true).as("_deleted"): _*)
+    val newest = (baseGenList().lastOption ++ deltaPaths().lastOption).maxByOption(_._1)
+    val nullCols = newest.toSeq.flatMap { case (_, p) =>
+      fileSchema(p).fields.toSeq
+        .filter(f => f.name != keyCol && f.name != "_deleted")
+        .map(f => lit(null).cast(f.dataType).as(f.name))
+    }
+    ids.select((col(keyCol) +: nullCols) :+ lit(true).as("_deleted"): _*)
       .write.mode("errorifexists").parquet(s"$dir/delta_v$v.parquet")
     v
   }
@@ -387,9 +443,7 @@ class MorTable(spark: SparkSession, dir: String, keyCol: String) {
     * reads), so this is garbage collection, not data loss.
     */
   def truncateAbove(ceiling: Int): Unit =
-    deltaPaths().filter(_._1 > ceiling).foreach { case (_, p) =>
-      fs.delete(p, true)
-    }
+    deltaPaths().filter(_._1 > ceiling).foreach { case (_, p) => deleteFile(p) }
 
   /** Fold the live generation + pending deltas into a NEW generation
     * file `base_v<ceiling>.parquet` (bounds read amplification; the
@@ -433,14 +487,14 @@ class MorTable(spark: SparkSession, dir: String, keyCol: String) {
     def genOf(c: Int): Int = genCeils.filter(_ <= c).lastOption.getOrElse(0)
     val keepGens: Set[Int] = Set(cur) ++ prev ++ pinnedCeilings.map(genOf)
     gens.filterNot(g => keepGens.contains(g._1))
-      .foreach(g => fs.delete(g._2, true))
+      .foreach(g => deleteFile(g._2))
     val neededRanges: Set[(Int, Int)] =
       pinnedCeilings.map(c => (genOf(c), c)) + ((prev.getOrElse(0), cur))
     deltaPaths()
       .filter { case (v, _) =>
         v <= cur && !neededRanges.exists { case (lo, hi) => v > lo && v <= hi }
       }
-      .foreach { case (_, p) => fs.delete(p, true) }
+      .foreach { case (_, p) => deleteFile(p) }
   }
 
   /** Generations retained beyond the live one (previous window +

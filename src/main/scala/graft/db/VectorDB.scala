@@ -1060,6 +1060,8 @@ class VectorDB private (
     if (isMor) {
       // O(batch): append tombstone markers only (same commit protocol
       // as the upsert path: both tiers land, then `_committed` flips).
+      // Each tier takes the tombstone's columns from its own newest
+      // file's memoized schema, so neither `codes` nor `docs` is built.
       // THREE independent jobs overlapped (guide §2.6): the two tiers'
       // tombstone writes on pool threads, the presence check on the
       // caller thread. The commit point stays the `_committed` flip
@@ -1071,7 +1073,7 @@ class VectorDB private (
       beginMorCommit()
       val ((nc, nd), _) = VectorDB.tierParallel(
         VectorDB.tierParallel(
-          codesMor.delete(idDf, codes), docsMor.delete(idDf, docs)),
+          codesMor.delete(idDf), docsMor.delete(idDf)),
         presenceCheck())
       assertWritable()
       writeCommitted(nc, nd)
@@ -3101,8 +3103,9 @@ object VectorDB {
     *    created it (threads live 60 s across unrelated callers), so a
     *    tier commit write could be killed by an unrelated
     *    `cancelJobGroup` or land in the wrong pool;
-    *  - when the CALLER-thread op `b` throws, the pooled future is
-    *    cancelled and awaited before the exception propagates — the
+    *  - when the CALLER-thread op `b` throws, the pooled op is skipped
+    *    if it has not begun, else awaited (not cancelled: its Spark
+    *    jobs run to completion) before the exception propagates — the
     *    sequential code could never start the second op after the
     *    first failed, and an abandoned in-flight tier write could
     *    otherwise land AFTER the failed commit (the next commit's

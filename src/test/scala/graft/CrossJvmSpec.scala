@@ -26,19 +26,32 @@ class CrossJvmSpec extends AnyFunSuite {
     ids.map(i => (i.toLong, s"document number $i topic ${i % 7}"))
       .toDF("doc_id", "text")
 
-  /** Fork one probe invocation; returns its PROBE: line. */
-  private def probe(args: String*): String = {
-    val launcher = new java.io.File("scripts/run.sh")
+  /** A forked probe JVM. Its stderr goes to a temp file: read through a
+    * pipe only after stdout's EOF, a child that fills the stderr pipe
+    * buffer (Spark's log) would block forever on its next write.
+    */
+  private final class Probe(args: Seq[String]) {
+    private val launcher = new java.io.File("scripts/run.sh")
     assume(launcher.isFile &&
       new java.io.File("target/scala-2.13/classes/graft/CrossJvmProbe.class").isFile,
       "compiled-classes launcher not available")
-    val cmd = Seq("bash", launcher.getPath, "graft.CrossJvmProbe") ++ args
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(false)
-    val proc = pb.start()
-    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
-    val err = scala.io.Source.fromInputStream(proc.getErrorStream).getLines().toList
-    val code = proc.waitFor()
+    private val errFile = java.io.File.createTempFile("crossjvm-probe", ".err")
+    private val proc =
+      new ProcessBuilder(Seq("bash", launcher.getPath, "graft.CrossJvmProbe") ++ args: _*)
+        .redirectError(errFile).start()
+
+    /** Waits for the exit; (exit code, stdout lines, stderr lines). */
+    def await(): (Int, List[String], List[String]) = {
+      val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+      val code = proc.waitFor()
+      val src = scala.io.Source.fromFile(errFile)
+      try (code, out, src.getLines().toList) finally { src.close(); errFile.delete() }
+    }
+  }
+
+  /** Fork one probe invocation; returns its PROBE: line. */
+  private def probe(args: String*): String = {
+    val (code, out, err) = new Probe(args).await()
     assert(code == 0, s"probe ${args.mkString(" ")} exited $code:\n${err.takeRight(15).mkString("\n")}")
     out.find(_.startsWith("PROBE:")).getOrElse(
       fail(s"no PROBE line from ${args.mkString(" ")}:\n${out.mkString("\n")}"))
@@ -103,16 +116,9 @@ class CrossJvmSpec extends AnyFunSuite {
     val db = VectorDB.openOrCreate(spark, dir, storage = VectorDB.StorageMor)
     db.addDocuments(fixture(0 until 10))
 
-    val launcher = new java.io.File("scripts/run.sh")
-    assume(launcher.isFile &&
-      new java.io.File("target/scala-2.13/classes/graft/CrossJvmProbe.class").isFile,
-      "compiled-classes launcher not available")
     val nCommits = 25
     val maxN = 10 + 2 * nCommits
-    val pb = new ProcessBuilder("bash", launcher.getPath,
-      "graft.CrossJvmProbe", "watch", dir, "12000", maxN.toString)
-    pb.redirectErrorStream(false)
-    val proc = pb.start()
+    val watch = new Probe(Seq("watch", dir, "12000", maxN.toString))
     // gate: wait for the probe's watch loop to actually start
     val gate = new java.io.File(dir, "_probe_watching")
     val gateDeadline = System.currentTimeMillis() + 120000
@@ -125,9 +131,7 @@ class CrossJvmSpec extends AnyFunSuite {
       db.addDocuments(fixture(100 + 2 * i until 100 + 2 * i + 2))
       i += 1
     }
-    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
-    val err = scala.io.Source.fromInputStream(proc.getErrorStream).getLines().toList
-    val code = proc.waitFor()
+    val (code, out, err) = watch.await()
     assert(code == 0, s"watch probe exited $code:\n${err.takeRight(15).mkString("\n")}")
     val line = out.find(_.startsWith("PROBE: WATCH")).getOrElse(
       fail(s"no PROBE line:\n${out.mkString("\n")}"))

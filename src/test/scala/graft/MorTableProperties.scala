@@ -73,7 +73,7 @@ class MorTableProperties extends AnyFunSuite {
           // unconditionally (the facade pre-validates existence);
           // model: absent keys stay absent
           if (nonEmpty) {
-            t.delete(ks.map(Tuple1(_)).toDF("id"), t.read())
+            t.delete(ks.map(Tuple1(_)).toDF("id"))
             model --= ks
           }
         case Compact(_) =>

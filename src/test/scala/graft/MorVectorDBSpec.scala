@@ -1,6 +1,8 @@
 package graft
 
-import graft.db.VectorDB
+import graft.db.{MorTable, VectorDB}
+import org.apache.spark.ListenerBusSync
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Merge-on-read storage mode: same CRUD semantics as copy-on-write, but
@@ -15,6 +17,28 @@ class MorVectorDBSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory("graftmor").toFile
     d.delete()
     d.getAbsolutePath
+  }
+
+  /** Foreground Spark jobs submitted while `body` runs (the absorb
+    * daemons of other suites' DBs run in the background pool).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties == null ||
+            e.properties.getProperty("spark.scheduler.pool") != graft.Graft.BackgroundPool)
+          n.incrementAndGet()
+    }
+    ListenerBusSync.drain(sc)
+    sc.addSparkListener(l)
+    try body
+    finally {
+      ListenerBusSync.drain(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get
   }
 
   test("MOR lifecycle: upsert/update/delete via deltas, compaction, reopen") {
@@ -196,7 +220,7 @@ class MorVectorDBSpec extends AnyFunSuite {
     t.upsert((1L to 1000L).map(i => (i, s"v$i")).toDF("id", "v"))
     t.compact() // establish a base of 1000 rows
     t.upsert(Seq((1L, "updated"), (2000L, "brand new")).toDF("id", "v"))
-    t.delete(Seq(Tuple1(2L)).toDF("id"), t.read())
+    t.delete(Seq(Tuple1(2L)).toDF("id"))
 
     val df = t.read()
     // last-writer-wins semantics across update / insert / tombstone
@@ -262,5 +286,69 @@ class MorVectorDBSpec extends AnyFunSuite {
     assert(parts.length == 1,
       s"100 tombstones must land as one file, got ${parts.length}")
     assert(db.count() == 100)
+  }
+
+  test("a MOR removeDocs submits as many Spark jobs after 4 commit/delete cycles as after 1") {
+    // Inferring a file's schema is one Spark job. A delete that paid it
+    // again for every file it has already read would grow by a job per
+    // pending delta per read of the tier.
+    val db = VectorDB.openOrCreate(spark, freshDir(), storage = VectorDB.StorageMor)
+    db.addDocuments((1L to 40L).map(i => (i, s"doc number $i words")).toDF("doc_id", "text"))
+    val jobs = (1 to 4).map { c =>
+      db.addDocuments(Seq((100L + c, s"churn doc $c")).toDF("doc_id", "text"))
+      assert(db.count() == 41)
+      val n = jobsOf(db.removeDocs(Seq(c.toLong)))
+      assert(db.count() == 40)
+      n
+    }
+    assert(db.pendingDeltas() == 9)
+    assert(jobs.head == jobs.last,
+      s"removeDocs jobs per cycle ${jobs.mkString(", ")}: must not grow with pending deltas")
+  }
+
+  test("a second MorTable.readAt over files it has already read submits no job") {
+    val t = new MorTable(spark, freshDir() + "/memoread", "id")
+    t.upsert(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    t.compact()
+    t.upsert(Seq((3L, "c")).toDF("id", "v"))
+    t.delete(Seq(Tuple1(1L)).toDF("id"))
+    val ceil = t.versionCeiling()
+    assert(jobsOf(t.readAt(ceil)) > 0, "the first read infers each file's schema")
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { df = t.readAt(ceil) } == 0)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
+  }
+
+  test("the schema memo follows a rewritten orphan version; legacy deltas and empty DBs") {
+    val dir = freshDir() + "/memo"
+    val t = new MorTable(spark, dir, "id")
+    def rows(): Set[Seq[Any]] = t.read().collect().map(_.toSeq).toSet
+    t.upsert(Seq((1L, "a"), (2L, "b")).toDF("id", "v")) // v1
+    t.upsert(Seq((3L, "c")).toDF("id", "v"))            // v2
+    assert(rows() == Set(Seq(1L, "a"), Seq(2L, "b"), Seq(3L, "c")))
+
+    // v2 becomes an orphan and is written again with other rows and an
+    // extra column: a schema remembered from the old v2 would drop `w`
+    t.truncateAbove(1)
+    t.upsert(Seq((4L, "d", 7)).toDF("id", "v", "w"))  // v2 again
+    assert(t.read().columns.toSeq == Seq("id", "v", "w"))
+    assert(rows() == Set(Seq(1L, "a", null), Seq(2L, "b", null), Seq(4L, "d", 7)))
+
+    // a legacy delta written without `_deleted` reads as not deleted,
+    // and a tombstone over it takes its columns from that file
+    Seq((5L, "e", 8)).toDF("id", "v", "w").write.parquet(s"$dir/delta_v3.parquet")
+    assert(rows().contains(Seq(5L, "e", 8)))
+    t.delete(Seq(Tuple1(5L), Tuple1(1L)).toDF("id"))
+    assert(rows() == Set(Seq(2L, "b", null), Seq(4L, "d", 7)))
+
+    // an empty MOR DB still rejects a delete of an absent id, and its
+    // orphan tombstones do not get in the way of the first commit
+    val db = VectorDB.openOrCreate(spark, freshDir(), storage = VectorDB.StorageMor)
+    val e = intercept[IllegalArgumentException](db.removeDocs(Seq(1L)))
+    assert(e.getMessage.contains("not in index"))
+    db.addDocuments(Seq((1L, "a b c"), (2L, "d e f")).toDF("doc_id", "text"))
+    db.removeDocs(Seq(1L))
+    assert(db.count() == 1)
+    assert(db.search("d e f", k = 1).head().getAs[Long]("doc_id") == 2L)
   }
 }
