@@ -14,7 +14,7 @@ done
 # SPARK_JVM_OPTS: extra JVM flags (e.g. GC tuning for the 16M bench runs)
 # -Xms = -Xmx mirrors Spark's real executor launch (a growable heap
 # interleaves multi-GB first-touch allocation with expansion pauses:
-# BlockCodecProbe measured 9.6 s vs 0.94 s on a 2.4 GB warm block load).
+# BLOCKCODEC_r14.json: 9.6 s vs 0.94 s on a 2.4 GB warm block load).
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xms"${SPARK_DRIVER_MEM:-8g}" -Xmx"${SPARK_DRIVER_MEM:-8g}" ${SPARK_JVM_OPTS:-} \

@@ -345,8 +345,8 @@ object Bench {
     def obj(m: collection.Map[String, Double]) =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // x-family phase split (clone/pin/commit/compact/search walls from
-    // the timed rep) so the x-rows' variance is attributable without a
-    // separate TxBench run (r16 verdict item 5)
+    // the timed rep) so the x-rows' variance is attributable from the
+    // bench line alone (r16 verdict item 5)
     def r3(x: Double): Double = math.round(x * 1000) / 1000.0
     val tx = if (txPhases.isEmpty) ""
       else txPhases.map { case (k, v) => "\"" + k + "\":" + r3(v) }
@@ -387,10 +387,11 @@ object Bench {
     *  1. a DETAIL line (full-precision medians, mins, tx_phases, every
     *     forensic stamp) — same content the old line carried, nothing
     *     is lost;
-    *  2. the compact FINAL line — metric/value/unit/queries (3-decimal
-    *     medians)/errors/failed/mode/guard/cpus/sf, sized to sit whole
-    *     inside the driver's tail window (~1.75k chars at 68 queries;
-    *     [[benchFinalLine]] is length-pinned in BenchGuardSpec).
+    *  2. the compact FINAL line — metric/value/unit/queries (rounded
+    *     medians, see [[benchFinalLine]])/errors/failed/mode/guard/cpus/sf,
+    *     sized to sit whole inside a 2000-char tail window (~1.8k
+    *     chars at 68 queries; [[benchFinalLine]] is length-pinned in
+    *     BenchGuardSpec).
     * CHILD processes keep the old single full-precision line verbatim —
     * [[parseChildLine]] is that protocol's only consumer.
     * The timed action (per-family child JVM, untimed warm pass, median
@@ -424,9 +425,11 @@ object Bench {
   }
 
   /** The compact final line — the LAST stdout line of a top-level run,
-    * and the one the driver parses. Query medians at 3 decimals
-    * (Double.toString of the rounded value: locale-independent, trailing
-    * zeros dropped). Extracted for the length pin in BenchGuardSpec.
+    * and the one a reader parses. Query medians at 3 decimals below
+    * 10 s, 2 below 100 s and 1 above (so at most 4 significant digits
+    * below 1000 s; the detail line keeps full precision), printed as
+    * Double.toString of the rounded value: locale-independent, trailing
+    * zeros dropped. Extracted for the length pin in BenchGuardSpec.
     */
   private[graft] def benchFinalLine(qMed: collection.Map[String, Double],
                                     errors: Int, failed: Seq[String],
@@ -434,7 +437,11 @@ object Bench {
                                     guard: String, reruns: Seq[String] = Nil,
                                     fallbackReason: String = ""): String = {
     def r3(x: Double): Double = math.round(x * 1000) / 1000.0
-    val q = qMed.map { case (k, v) => "\"" + k + "\":" + r3(v) }
+    def compact(x: Double): Double = {
+      val scale = if (x >= 100) 10.0 else if (x >= 10) 100.0 else 1000.0
+      math.round(x * scale) / scale
+    }
+    val q = qMed.map { case (k, v) => "\"" + k + "\":" + compact(v) }
       .mkString("{", ",", "}")
     val total = if (errors > 0) -1.0 else r3(qMed.values.sum)
     val failedArr = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -762,9 +769,11 @@ object Bench {
       // prefix — a future query merely NAMED x* must not silently get
       // a noisier 1-rep median). Each rep is 4s of deliberate
       // commit/fence/re-read semantics at Spark's per-job floor
-      // (TxPhaseProbe-adjudicated irreducible), its regression signal
-      // lives in TxBench/IncBench, and 3 reps made x1+x2 31% of the
-      // whole driver gate for a median nobody reads.
+      // (irreducible by the per-phase split, ARCHITECTURE "The x-family
+      // gate cost, dissected"), its regression signal lives in
+      // `tx_phases` and perfbench's commit/delete/visible medians, and 3
+      // reps made x1+x2 31% of the whole bench gate for a median nobody
+      // reads.
       val qReps = if (Bench.SingleRepQueries.contains(name)) 1 else reps
       val samples = (1 to qReps).map { _ =>
         val t0 = System.nanoTime()

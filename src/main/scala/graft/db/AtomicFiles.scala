@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * staging sibling onto its destination so concurrent readers observe
   * the OLD bytes or the NEW bytes — never absence, never a torn file.
   *
-  * Why this exists (r13 lease fix, `MarkerSwapProbe`):
+  * Why this exists (r13 lease fix; ARCHITECTURE "Marker atomicity"):
   * `FileSystem.rename` REFUSES an existing destination on the local FS
   * (measured 100% of overwrite renames returning false), which pushes
   * naive callers through a delete+rename whose absence window a

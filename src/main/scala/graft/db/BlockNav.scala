@@ -278,8 +278,8 @@ final class NswNav(
     out
   }
 
-  /** Diagnostic (NavMissProbe): the graph's adjacency, read-only —
-    * (neighbors flat array, per-row degree, maxDeg).
+  /** The graph's adjacency, read-only — (neighbors flat array,
+    * per-row degree, maxDeg). Nav persistence and specs read it.
     */
   private[graft] def adjacencyView: (Array[Int], Array[Int], Int) =
     (neighbors, degree, maxDeg)
@@ -295,36 +295,6 @@ final class NswNav(
     * the block is below the size threshold (or hierarchy off).
     */
   private[graft] def upperView: (NswNav, Array[Int]) = (upper, upperMap)
-
-  /** Diagnostic (OrphanProbe, specs): rows with NO directed path from
-    * the stride entries — the structural-unreachability residue a
-    * best-first search can never visit regardless of `ef < n`. With the
-    * build-time repair on, this counts only what `orphans` still
-    * covers.
-    */
-  private[graft] def unreachableCount: Int = {
-    val n = degree.length
-    val reach = new java.util.BitSet(n)
-    val stack = new java.util.ArrayDeque[Integer]()
-    var e = 0
-    while (e < 4) {
-      val entry = (n.toLong * e / 4).toInt
-      if (entry < n && !reach.get(entry)) { reach.set(entry); stack.push(entry) }
-      e += 1
-    }
-    while (!stack.isEmpty) {
-      val r = stack.pop().intValue()
-      val base = r * maxDeg
-      val deg = degree(r)
-      var j = 0
-      while (j < deg) {
-        val nb = neighbors(base + j)
-        if (!reach.get(nb)) { reach.set(nb); stack.push(nb) }
-        j += 1
-      }
-    }
-    n - reach.cardinality()
-  }
 }
 
 object NswNav {
@@ -399,13 +369,7 @@ object NswNav {
   */
 final class NswNavBuilder(m: Int, efConstruction: Int, efSearch: Int,
                           buildThreads: Int = 0,
-                          hierarchy: Boolean = true,
-                          /** Diagnostic escape hatch (OrphanProbe's A/B
-                            * baseline): `false` skips the reachability
-                            * repair — the pre-r12 behavior whose severed
-                            * rows produced the 0.975 recall plateau.
-                            */
-                          repair: Boolean = true)
+                          hierarchy: Boolean = true)
     extends NavBuilder {
   require(m >= 1, s"m must be >= 1, got $m")
   require(efConstruction >= m,
@@ -684,20 +648,20 @@ final class NswNavBuilder(m: Int, efConstruction: Int, efSearch: Int,
       }
     }
     // ---- Hermit re-insertion (the r12 plateau root cause) -----------------
-    // NavMissProbe on the 1M-row-block manifold showed the persistent
-    // recall misses are HERMIT rows: their whole out-adjacency is far
-    // (min out-neighbor distance ~150 bits where cluster mates sit at
-    // ~55-70), because their own insert-time beam navigated the
-    // PARTIAL graph to the wrong region and linked far — after which
-    // near rows never discover them (all inbound edges also far), a
-    // self-sealing failure no search-time ef can break (misses persist
+    // Per-miss forensics on the 1M-row-block manifold (NAVMISS_r12.json)
+    // showed the persistent recall misses are HERMIT rows: their whole
+    // out-adjacency is far (min out-neighbor distance ~150 bits where
+    // cluster mates sit at ~55-70), because their own insert-time beam
+    // navigated the PARTIAL graph to the wrong region and linked far —
+    // after which near rows never discover them (all inbound edges also
+    // far), a self-sealing failure no search-time ef can break (misses persist
     // at ef 8000). Second-pass refinement (the NSG/Vamana shape): flag
     // rows whose nearest out-neighbor is > 1.5× the block median,
     // re-run the insert beam on the COMPLETE graph (which navigates
     // where the partial one failed), and relink — forced backlinks,
     // since the diversity re-select is what sealed them in the first
     // place.
-    if (repair && n > 8) {
+    if (n > 8) {
       val dOutMin = new Array[Int](n)
       var r0 = 0
       while (r0 < n) {
@@ -744,7 +708,7 @@ final class NswNavBuilder(m: Int, efConstruction: Int, efSearch: Int,
     }
 
     // ---- Near-inbound guarantee (the r12 plateau root cause) --------------
-    // Reachable is not discoverable: NavMissProbe showed the residual
+    // Reachable is not discoverable: NAVMISS_r12.json showed the residual
     // misses (recall plateau 0.975 at 1M-row blocks, GRAPHBENCH_r12_4m)
     // are rows with HEALTHY in-degree whose inbound edges all come from
     // FAR nodes — in a dense region, every near neighbor's shrink
@@ -762,37 +726,35 @@ final class NswNavBuilder(m: Int, efConstruction: Int, efSearch: Int,
     // keepPrunedConnections / Vamana's reverse-edge insertion address.
     // Any orphaning from the forced replacement is caught by the
     // reachability passes below.
-    if (repair) {
-      var r = 0
-      while (r < n) {
-        val base = r * maxDeg
-        val deg = degree(r)
-        var has = false
-        var nearest0 = -1
-        var nearestD = Int.MaxValue
-        var j = 0
-        while (!has && j < deg) {
-          val nb = neighbors(base + j)
-          val nbase = nb * maxDeg
-          val nd = degree(nb)
-          var k = 0
-          while (!has && k < nd) {
-            if (neighbors(nbase + k) == r) has = true
-            k += 1
-          }
-          if (!has) {
-            val d = ham(r, nb)
-            if (d < nearestD) { nearestD = d; nearest0 = nb }
-          }
-          j += 1
+    var r = 0
+    while (r < n) {
+      val base = r * maxDeg
+      val deg = degree(r)
+      var has = false
+      var nearest0 = -1
+      var nearestD = Int.MaxValue
+      var j = 0
+      while (!has && j < deg) {
+        val nb = neighbors(base + j)
+        val nbase = nb * maxDeg
+        val nd = degree(nb)
+        var k = 0
+        while (!has && k < nd) {
+          if (neighbors(nbase + k) == r) has = true
+          k += 1
         }
-        if (!has && nearest0 >= 0) forceLink(nearest0, r)
-        r += 1
+        if (!has) {
+          val d = ham(r, nb)
+          if (d < nearestD) { nearestD = d; nearest0 = nb }
+        }
+        j += 1
       }
+      if (!has && nearest0 >= 0) forceLink(nearest0, r)
+      r += 1
     }
 
-    var reach = if (repair) bfsReachable() else null
-    var orphans = if (repair) unreached(reach) else Array.emptyIntArray
+    var reach = bfsReachable()
+    var orphans = unreached(reach)
     val initialOrphans = orphans.length
     var pass = 0
     while (pass < 3 && orphans.length > 0) {
@@ -1130,7 +1092,7 @@ object NswNavBuilder {
   /** Auto pool-size ceiling: insertion throughput flattens past this
     * (lock-striping contention on the hot adjacency rows), and one
     * build must not monopolize a big box another build is about to
-    * share (CrossoverProbe measured ~diminishing returns past 8–16).
+    * share (CROSSOVER_r12.json measured ~diminishing returns past 8–16).
     */
   val MaxAutoThreads = 16
 

@@ -26,8 +26,8 @@ import org.apache.hadoop.fs.Path
   * carrying its own CRC32, then a footer table of extent descriptors
   * and a fixed trailer pointing at it. v1 streamed one sequential body
   * under a single trailing CRC — simple, but it forced a WARM load to
-  * be one thread per block, and profiling (BlockCodecProbe + a section
-  * probe) showed the warm wall is NOT the device: it is first-touch
+  * be one thread per block, and profiling (BLOCKCODEC_r14.json + a
+  * section probe) showed the warm wall is NOT the device: it is first-touch
   * allocation + decode of multi-GB arrays on a single thread while the
   * rest of the machine idles (2 blocks = 2 live tasks in the
   * few-big-blocks serving regime). Extents make the load

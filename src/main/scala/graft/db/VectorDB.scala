@@ -155,7 +155,7 @@ class VectorDB private (
     * the old bytes or the new bytes, never absence, never a torn file.
     *
     * The swap must NOT go through `FileSystem.rename`: its contract
-    * REFUSES an existing destination (graft.MarkerSwapProbe measured
+    * REFUSES an existing destination (a marker-swap probe measured
     * 100% of overwrite renames returning false on the local FS, pushing
     * every swap through a delete+rename whose absence window a
     * concurrent reader hit ~4% of the time — the residual lease-steal
@@ -1916,7 +1916,6 @@ class VectorDB private (
     val (cc1, dc1) = committedCeilings()
     val (cc0, dc0) = pc.morCeilings
     if (cc1 <= cc0 || dc1 <= dc0) return None // nothing to adopt / rewound
-    val t0 = System.nanoTime()
     // Small windows (the crawl-loop regime: a few MB of delta files)
     // resolve DRIVER-SIDE from one collect per tier — last-writer-wins
     // by key, touched ids derived in the same pass — instead of paying
@@ -1936,7 +1935,6 @@ class VectorDB private (
     if (touched.length > VectorDB.IncServingMaxTouched) return None
     if (pc.churnRows + touched.length > incServingChurnFrac * pc.baseRows)
       return None
-    val t1 = System.nanoTime()
     val out =
       if (liveRows == 0L)
         // Delete-only window (every touched id a tombstone): the layer
@@ -1966,8 +1964,6 @@ class VectorDB private (
           newCeilings = (cc1, dc1),
           onBaseFree = () => BlockCache.release(cacheKey, prevVersion))
       }
-    val t2 = System.nanoTime()
-    lastExtendTimings = Some(((t1 - t0) / 1e6, (t2 - t1) / 1e6))
     Some(out)
   }
 
@@ -2031,11 +2027,6 @@ class VectorDB private (
     */
   @volatile private[graft] var incServingDriverWindowBytes: Long =
     VectorDB.IncServingDriverWindowBytes
-
-  /** Diagnostic: (touched-keys ms, window-build ms) of the most recent
-    * chain extension through this instance.
-    */
-  @volatile private[graft] var lastExtendTimings: Option[(Double, Double)] = None
 
   /** Exact driver-side mirror of the phase-III column expression
     * `graft_dot_int8(q, emb_int8) / graft_norm_int8(emb_int8)`: both
@@ -3366,12 +3357,10 @@ object VectorDB {
     * (64 MB). Below it a cold serve-build is sub-second and the write
     * is pure overhead (r15 A/B); the 1M×1024 reference geometry
     * (~1.3 GB of tier files) and every warm-restart regime sit far
-    * above it. `SPARK_GRAFT_BLOCK_PERSIST_MIN` overrides the default
-    * process-wide (bench A/Bs: 0 forces writes on, a huge value off).
+    * above it. A DB that wants writes always on or off sets its own
+    * [[VectorDB.blockPersistence]].
     */
-  val BlockPersistMinBytes: Long =
-    sys.env.get("SPARK_GRAFT_BLOCK_PERSIST_MIN").flatMap(_.toLongOption)
-      .getOrElse(64L << 20)
+  val BlockPersistMinBytes: Long = 64L << 20
 
   /** Heap budget multiple under which the serve-build logs the GC
     * hazard: the r14 restart A/B measured the warm serving paths
@@ -3450,7 +3439,7 @@ object VectorDB {
     * re-checks the version), so during a storm whose period is below
     * the build wall the fixed 1.5 s floor just schedules doomed,
     * commit-contending builds every cycle — measured at the true
-    * 2-block IncBench geometry as 13–32 s commits vs 3.5–5.4 s
+    * 2-block INCBENCH_r13 geometry as 13–32 s commits vs 3.5–5.4 s
     * without absorption, with the tier never adopting. Requiring
     * idle ≥ 2× the cadence EMA means a storm defers absorption
     * wholesale (chain extensions stay O(batch)); the first real lull

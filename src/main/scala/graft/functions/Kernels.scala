@@ -102,18 +102,14 @@ object Kernels {
       // The ungrouped graft_topk_cand fast path (primitive-heap physical
       // operator — see graft.plans.TopKCandStrategy). Idempotent per
       // session; sessions built with GraftExtensions get it there.
-      // SPARK_GRAFT_NO_TOPK_EXEC=1 keeps the ObjectHashAggregate path
-      // (A/B benching + safety valve for a custom physical operator).
-      if (!sys.env.contains("SPARK_GRAFT_NO_TOPK_EXEC")) {
-        // ExperimentalMethods may be shared across session clones, and
-        // check-then-append is not atomic — two sessions installing
-        // concurrently could register the strategy twice (ADVICE r11).
-        // One global lock: installs are rare (once per session).
-        val exp = spark.experimental
-        strategyLock.synchronized {
-          if (!exp.extraStrategies.contains(graft.plans.TopKCandStrategy))
-            exp.extraStrategies = exp.extraStrategies :+ graft.plans.TopKCandStrategy
-        }
+      // ExperimentalMethods may be shared across session clones, and
+      // check-then-append is not atomic — two sessions installing
+      // concurrently could register the strategy twice (ADVICE r11).
+      // One global lock: installs are rare (once per session).
+      val exp = spark.experimental
+      strategyLock.synchronized {
+        if (!exp.extraStrategies.contains(graft.plans.TopKCandStrategy))
+          exp.extraStrategies = exp.extraStrategies :+ graft.plans.TopKCandStrategy
       }
     }
 

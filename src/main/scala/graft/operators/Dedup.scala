@@ -78,13 +78,8 @@ object Dedup {
     simhashCache.filterInPlace { case ((s, _), df) =>
       if (s == spark) { df.unpersist(); false } else true }
     docCountCache.filterInPlace { case ((s, _), _) => s != spark }
-    boilerplateFlagPersists.filterInPlace { case ((s, _), df) =>
-      if (s == spark) { df.unpersist(); false } else true }
-    rankedPersists.filterInPlace { case ((s, _), (df, bc)) =>
-      // unpersist, not destroy: a caller still holding the ranked
-      // relation recomputes correctly (the broadcast value re-ships
-      // from the driver); destroy would turn slow into WRONG
-      if (s == spark) { df.unpersist(); bc.unpersist(); false } else true }
+    boilerplateFlagPersists.clear(spark)
+    rankedPersists.clear(spark)
   }
 
   /** Fixture-corpus row count, memoized per (session, dir) — the
@@ -647,6 +642,25 @@ object Dedup {
       .orderBy("vec_id")
   }
 
+  /** Max live persisted relations per session in each dedup registry.
+    * 2 covers the two in-repo callers interleaving within one query run
+    * (and d7/d8's two persists per call).
+    */
+  private[graft] val PersistRegistryCap = 2
+
+  // unpersist, not destroy: a caller still holding the ranked relation
+  // recomputes correctly (the offsets broadcast re-ships from the
+  // driver); destroy would turn slow into WRONG
+  private val rankedPersists =
+    new PersistRegistry[(DataFrame, org.apache.spark.broadcast.Broadcast[Array[Long]])](
+      PersistRegistryCap, { case (df, bc) => df.unpersist(); bc.unpersist() })
+
+  /** Live registry sizes for this session (ranked, flagged) — spec
+    * visibility for the eviction cap.
+    */
+  private[graft] def livePersistCounts(spark: SparkSession): (Int, Int) =
+    (rankedPersists.size(spark), boilerplateFlagPersists.size(spark))
+
   /** Distributed dense rank within (cluster, s16) buckets ordered by
     * (sk, vec_id) — the multi-task replacement for a bucket-partitioned
     * `row_number` window (whose WindowExec gathers and sorts each whole
@@ -680,39 +694,6 @@ object Dedup {
     * registered, with its offsets broadcast, for [[clearCaches]] to
     * release (broadcasts otherwise accumulate per call).
     */
-  private val rankedPersists =
-    scala.collection.concurrent.TrieMap.empty[
-      (SparkSession, Long),
-      (DataFrame, org.apache.spark.broadcast.Broadcast[Array[Long]])]
-  private val rankedSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Max live persisted relations per session in each registry. A
-    * repeated caller (the bench's warm pass + reps; a library user
-    * looping semdedupBounded/exportShuffle without clearCaches) would
-    * otherwise accumulate full-corpus persisted copies without bound
-    * (ADVICE r16). Eviction unpersists oldest-first — always correct:
-    * an evicted relation still mid-read by a concurrent caller just
-    * recomputes (and its offsets broadcast re-ships from the driver;
-    * unpersist, never destroy). 2 covers the two in-repo callers
-    * interleaving within one query run.
-    */
-  private[graft] val PersistRegistryCap = 2
-
-  private def evictOldest[V](registry: scala.collection.concurrent.TrieMap[(SparkSession, Long), V],
-                             spark: SparkSession, cap: Int)(release: V => Unit): Unit = {
-    val mine = registry.keys.filter(_._1 == spark).toSeq.sortBy(_._2)
-    mine.dropRight(cap).foreach { k =>
-      registry.remove(k).foreach(release)
-    }
-  }
-
-  /** Live registry sizes for this session (ranked, flagged) — spec
-    * visibility for the eviction cap.
-    */
-  private[graft] def livePersistCounts(spark: SparkSession): (Int, Int) =
-    (rankedPersists.keys.count(_._1 == spark),
-      boilerplateFlagPersists.keys.count(_._1 == spark))
-
   private[graft] def rankWithinBuckets(keyed: DataFrame): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
@@ -770,10 +751,7 @@ object Dedup {
     val ranked = spark
       .createDataFrame(rankedRdd, schema.add("rnk", LongType, nullable = false))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rankedPersists.put((spark, rankedSeq.incrementAndGet()), (ranked, bc))
-    evictOldest(rankedPersists, spark, PersistRegistryCap) {
-      case (df, b) => df.unpersist(); b.unpersist()
-    }
+    rankedPersists.register(spark, (ranked, bc))
     ranked
   }
 
@@ -831,8 +809,7 @@ object Dedup {
     * [[clearCaches]] releases them with the other dedup relations.
     */
   private val boilerplateFlagPersists =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, Long), DataFrame]
-  private val boilerplateFlagSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+    new PersistRegistry[DataFrame](PersistRegistryCap, _.unpersist())
 
   /** [[boilerplateChunks]] over any (doc_id, text) relation — the
     * fixture corpus carries NATURAL repeated chunks (its near-duplicate
@@ -860,10 +837,7 @@ object Dedup {
         i => array_join(slice(col("w"), i * window + lit(1), lit(window)), " ")))).as("c"))
       .withColumn("h", Kernels.h60(col("c")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    boilerplateFlagPersists.put(
-      (relation.sparkSession, boilerplateFlagSeq.incrementAndGet()), chunks)
-    evictOldest(boilerplateFlagPersists, relation.sparkSession,
-      PersistRegistryCap)(_.unpersist())
+    boilerplateFlagPersists.register(relation.sparkSession, chunks)
     // Persist BEFORE the gate count so the chunk agg runs once: the
     // count consumes the same materialization the join then reuses.
     // Lifecycle rides the session's dedup-cache registry.
@@ -872,10 +846,7 @@ object Dedup {
       .filter(col("df") >= dfMin)
       .select(col("h"), lit(1L).as("is_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    boilerplateFlagPersists.put(
-      (relation.sparkSession, boilerplateFlagSeq.incrementAndGet()), flagged)
-    evictOldest(boilerplateFlagPersists, relation.sparkSession,
-      PersistRegistryCap)(_.unpersist())
+    boilerplateFlagPersists.register(relation.sparkSession, flagged)
     val nFlagged = flagged.count()
     val joined =
       if (nFlagged <= broadcastMaxFlagged) chunks.join(broadcast(flagged), Seq("h"), "left")
@@ -952,20 +923,14 @@ object Dedup {
           Kernels.h60(array_join(slice(col("w"), i, lit(k)), " ")).as("h"))))).as("x"))
       .select(col("doc_id"), col("x.o").as("o"), col("x.h").as("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    boilerplateFlagPersists.put(
-      (relation.sparkSession, boilerplateFlagSeq.incrementAndGet()), grams)
-    evictOldest(boilerplateFlagPersists, relation.sparkSession,
-      PersistRegistryCap)(_.unpersist())
+    boilerplateFlagPersists.register(relation.sparkSession, grams)
     // duplicated k-grams: corpus-wide occurrence count ≥ 2 (same hash at
     // ≥2 (doc,offset) sites — within- and cross-document both count, as
     // in the paper). Persist-before-count rides the d7 registry.
     val dup = grams.groupBy("h").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2).select("h")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    boilerplateFlagPersists.put(
-      (relation.sparkSession, boilerplateFlagSeq.incrementAndGet()), dup)
-    evictOldest(boilerplateFlagPersists, relation.sparkSession,
-      PersistRegistryCap)(_.unpersist())
+    boilerplateFlagPersists.register(relation.sparkSession, dup)
     val nDup = dup.count()
     val flagged =
       if (nDup <= broadcastMaxFlagged) grams.join(broadcast(dup), Seq("h"), "leftsemi")

@@ -19,28 +19,15 @@ object Pipeline {
   val CheckpointEvery = 5
 
   /** Per-call persisted base relations of [[corpusBuildOver]] (r17: the
-    * one-scan derived-values relation every build stage consumes),
-    * registered per session with latest-wins eviction — the same
-    * lifecycle discipline as [[Dedup.PersistRegistryCap]].
+    * one-scan derived-values relation every build stage consumes), cap 1
+    * per session.
     */
-  private val basePersists =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, Long), DataFrame]
-  private val basePersistSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val basePersists = new PersistRegistry[DataFrame](1, _.unpersist())
 
   /** Release this session's persisted p9 base relations (called from
     * [[graft.Graft.clearAllCaches]]).
     */
-  def clearCaches(spark: SparkSession): Unit =
-    basePersists.filterInPlace { case ((s, _), df) =>
-      if (s == spark) { df.unpersist(); false } else true }
-
-  private def registerPersist(spark: SparkSession, df: DataFrame): Unit = {
-    basePersists.put((spark, basePersistSeq.incrementAndGet()), df)
-    val mine = basePersists.keys.filter(_._1 == spark).toSeq.sortBy(_._2)
-    mine.dropRight(1).foreach { k =>
-      basePersists.remove(k).foreach(_.unpersist())
-    }
-  }
+  def clearCaches(spark: SparkSession): Unit = basePersists.clear(spark)
 
   private def docs(spark: SparkSession, dir: String): DataFrame = {
     Kernels.install(spark)
@@ -468,7 +455,7 @@ object Pipeline {
         size(Kernels.tokens(col("text"))).cast("long").as("n_tokens"),
         Kernels.shingles3(col("text")).as("s"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerPersist(d.sparkSession, base)
+    basePersists.register(d.sparkSession, base)
     // 1. exact dedup, keep-lowest-id
     val keepIds = base.groupBy("h").agg(min("doc_id").as("doc_id"))
       .select("doc_id")

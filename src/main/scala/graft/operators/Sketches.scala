@@ -46,34 +46,22 @@ object Sketches {
   val KmvK = 64
 
   /** Per-call persisted distinct (lang, h) relations of
-    * [[kmvJaccardLangs]], registered per session with latest-wins
-    * eviction (the [[Dedup.PersistRegistryCap]] discipline): the s2
+    * [[kmvJaccardLangs]], cap 1 per session: the s2
     * exact side consumes the relation from three join branches, and
     * filter pushdown differentiates the branches' subtrees enough that
     * Spark's exchange reuse cannot dedupe them — the persist is what
     * guarantees ONE corpus tokenize+shingle+md5 pass per invocation.
     */
-  private val distinctPersists =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, Long), DataFrame]
-  private val distinctSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val distinctPersists = new PersistRegistry[DataFrame](1, _.unpersist())
 
   /** Release this session's persisted s2 relations (same lifecycle hook
     * as the dedup caches — called from [[graft.Graft.clearAllCaches]]).
     */
-  def clearCaches(spark: SparkSession): Unit =
-    distinctPersists.filterInPlace { case ((s, _), df) =>
-      if (s == spark) { df.unpersist(); false } else true }
+  def clearCaches(spark: SparkSession): Unit = distinctPersists.clear(spark)
 
-  private def registerPersist(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    distinctPersists.put((spark, distinctSeq.incrementAndGet()), p)
-    val mine = distinctPersists.keys.filter(_._1 == spark).toSeq.sortBy(_._2)
-    mine.dropRight(1).foreach { k =>
-      distinctPersists.remove(k).foreach(_.unpersist())
-    }
-    p
-  }
+  /** Live persisted s2 relations of this session (spec visibility). */
+  private[graft] def livePersistCount(spark: SparkSession): Int =
+    distinctPersists.size(spark)
 
   /** Distinct-count estimate from a KMV kept-set array (sorted asc).
     * The numerator (k−1)·2^60 is exact in a double (6-bit mantissa ×
@@ -211,7 +199,8 @@ object Sketches {
 
     // Exact side: distinct (lang, h) self-join per pair — fixture-scale
     // oracle harness only; production callers use [[kmvJaccardLangsSketch]].
-    val dh = registerPersist(h.distinct())
+    val dh = distinctPersists.register(spark,
+      h.distinct().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val inter = dh.as("x").join(dh.as("y"),
         col("x.h") === col("y.h") && col("x.lang") < col("y.lang"))
       .groupBy(col("x.lang").as("lang_a"), col("y.lang").as("lang_b"))

@@ -23,30 +23,15 @@ object TextAnalysis {
   }
 
   /** Per-call persisted relations (t3's one-pass token relation), cap 1
-    * per session, latest-wins — the same registry discipline as
-    * `Sketches.distinctPersists`/d7/d8: a FRESH persisted DataFrame per
-    * invocation (nothing memoized across calls), evicted by the next
-    * call or [[clearCaches]].
+    * per session: evicted by the next call or [[clearCaches]].
     */
-  private val tokenPersists =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, Long), DataFrame]
-  private val tokenSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val tokenPersists = new PersistRegistry[DataFrame](1, _.unpersist())
 
-  def clearCaches(spark: SparkSession): Unit =
-    tokenPersists.filterInPlace { case ((s, _), df) =>
-      if (s eq spark) { df.unpersist(); false } else true
-    }
+  def clearCaches(spark: SparkSession): Unit = tokenPersists.clear(spark)
 
-  private def registerPersist(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tokenPersists.put((spark, tokenSeq.incrementAndGet()), p)
-    val mine = tokenPersists.keys.filter(_._1 == spark).toSeq.sortBy(_._2)
-    mine.dropRight(1).foreach { k =>
-      tokenPersists.remove(k).foreach(_.unpersist())
-    }
-    p
-  }
+  /** Live persisted t3 relations of this session (spec visibility). */
+  private[graft] def livePersistCount(spark: SparkSession): Int =
+    tokenPersists.size(spark)
 
   /** Stop tokens present in the fixture vocabulary. */
   private val StopWords = Seq("the", "a")
@@ -116,11 +101,12 @@ object TextAnalysis {
     // factoring's last instance): the marker fit consumed (lang, t) and
     // the scoring leg (doc_id, t), each re-running the whole
     // tokenization. Exploding once with BOTH columns and persisting
-    // per call (registry below, latest-wins) lets each leg
+    // per call (registry above, latest-wins) lets each leg
     // column-prune the cached relation instead; every aggregate below
     // is expression-identical, so the result is bit-equal.
-    val tok3 = registerPersist(d.select(col("doc_id"), col("lang"),
-      explode(Kernels.tokens(col("text"))).as("t")))
+    val tok3 = tokenPersists.register(spark,
+      d.select(col("doc_id"), col("lang"), explode(Kernels.tokens(col("text"))).as("t"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val tok = tok3.select(col("lang"), col("t"))
     val markers = tok.groupBy("lang", "t").agg(count(lit(1)).as("c"))
       .withColumn("rnk", row_number().over(

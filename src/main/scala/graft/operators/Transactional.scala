@@ -179,18 +179,15 @@ object Transactional {
   private[graft] def phaseTimings: Seq[(String, Double)] =
     phaseWall.toSeq.sortBy(_._1)
 
-  /** Per-phase wall timing: always recorded into [[phaseWall]]; the
-    * stderr print stays env-gated (SPARK_GRAFT_TX_PHASES=1). The
-    * x-family gate queries run many small Spark jobs, so their bench
-    * cost distribution is invisible from the outside.
+  /** Per-phase wall timing, recorded into [[phaseWall]]. The x-family
+    * gate queries run many small Spark jobs, so their bench cost
+    * distribution is invisible from the outside.
     */
   private def phased[T](name: String)(f: => T): T = {
     val t0 = System.nanoTime()
     val r = f
     val sec = (System.nanoTime() - t0) / 1e9
     phaseWall.put(name, sec)
-    if (sys.env.contains("SPARK_GRAFT_TX_PHASES"))
-      System.err.println(f"[txphase] $name ${sec * 1000}%.0f ms")
     r
   }
 

@@ -195,11 +195,11 @@ class BenchGuardSpec extends AnyFunSuite {
     * JSON), and every BENCH_r*.json since round 10 shipped
     * `parsed: null` because the old ~4.8k single line never fit. The
     * compact final line over the FULL declared query set at worst-case
-    * 3-decimal values must fit the window with slack.
+    * 8-character medians (1234.567 s) must fit the window with slack.
     */
   test("the compact final line fits the driver's 2000-char tail window") {
     val med = collection.mutable.LinkedHashMap.empty[String, Double]
-    SparkEntry.queries.keys.toSeq.sorted.foreach(q => med += q -> 8.888)
+    SparkEntry.queries.keys.toSeq.sorted.foreach(q => med += q -> 1234.567)
     val line = Bench.benchFinalLine(med, errors = 0, failed = Nil,
       sfDir = "/root/testdata/sf0.1", mode = "forked", guard = "armed",
       reruns = Seq("d", "q", "v"))
@@ -210,5 +210,9 @@ class BenchGuardSpec extends AnyFunSuite {
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     assert(root.get("queries").size() == SparkEntry.queries.size)
     assert(root.get("value").asDouble() > 0)
+    // sub-10 s medians keep millisecond resolution
+    val small = Bench.benchFinalLine(Map("v1_hamming_topk" -> 0.1234567),
+      errors = 0, failed = Nil, sfDir = "sf", mode = "forked", guard = "armed")
+    assert(small.contains("\"v1_hamming_topk\":0.123}"), small)
   }
 }

@@ -351,4 +351,36 @@ class MorVectorDBSpec extends AnyFunSuite {
     assert(db.count() == 1)
     assert(db.search("d e f", k = 1).head().getAs[Long]("doc_id") == 2L)
   }
+
+  /** The single-delta last-writer-wins shortcut in `MorTable` (a window
+    * of ONE delta skips the per-key rank) is exact only if no committed
+    * delta holds a key twice. Pinned where the data lands: after a
+    * commit mix that includes an overlapping update and a rejected
+    * duplicate-id batch (whose codes write may already have landed as
+    * an orphan delta), every delta file on disk has distinct live keys.
+    */
+  test("committed MOR deltas hold each live doc_id at most once") {
+    val db = VectorDB.openOrCreate(spark, freshDir(), storage = VectorDB.StorageMor)
+    db.addDocuments((1L to 6L).map(i => (i, s"doc $i alpha")).toDF("doc_id", "text"))
+    db.addDocuments((4L to 9L).map(i => (i, s"doc $i beta")).toDF("doc_id", "text"))
+    intercept[IllegalArgumentException] {
+      db.addDocuments(Seq((10L, "x y z"), (10L, "x y w"), (11L, "p q r"))
+        .toDF("doc_id", "text"))
+    }
+    db.removeDocs(Seq(2L, 5L))
+    assert(db.count() == 7)
+
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    for (tier <- Seq("codes.mor", "docs.mor")) {
+      val deltas = fs.listStatus(new org.apache.hadoop.fs.Path(s"${db.folder}/$tier"))
+        .map(_.getPath.getName).filter(n => n.startsWith("delta_v") && n.endsWith(".parquet"))
+      assert(deltas.length == 3, s"$tier: ${deltas.mkString(",")}")
+      deltas.foreach { name =>
+        val live = spark.read.parquet(s"${db.folder}/$tier/$name")
+          .filter(!$"_deleted").select("doc_id").as[Long].collect()
+        assert(live.distinct.length == live.length,
+          s"$tier/$name holds a live doc_id twice: ${live.sorted.mkString(",")}")
+      }
+    }
+  }
 }

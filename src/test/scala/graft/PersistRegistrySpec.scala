@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Sketches, TextAnalysis}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ADVICE r16 (medium): the rankWithinBuckets / boilerplate persist
@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * relations and broadcasts without bound. Pinned here: the registries
   * hold at most [[Dedup.PersistRegistryCap]] live entries per session,
   * oldest evicted (correct-but-recompute, never wrong), and repeated
-  * calls still produce identical results.
+  * calls still produce identical results. The same holds for t3's
+  * token relation and s2's distinct (lang, h) relation, whose
+  * registries keep one entry per session.
   */
 class PersistRegistrySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -56,5 +58,40 @@ class PersistRegistrySpec extends AnyFunSuite {
     assert(ranked <= Dedup.PersistRegistryCap,
       s"ranked registry grew to $ranked entries (cap ${Dedup.PersistRegistryCap})")
     Dedup.clearCaches(spark)
+  }
+
+  /** A tiny three-language `documents.parquet` fixture dir. */
+  private def fixtureDir(): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-persist-reg").toString
+    val langs = Seq("en", "de", "fr")
+    (0 until 60).map { i =>
+      val lang = langs(i % 3)
+      (i.toLong, lang, (0 until 12).map(j => s"${lang}w${(i + j) % 9}").mkString(" "))
+    }.toDF("doc_id", "lang", "text").coalesce(1)
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("repeated t3 langId and s2 kmvJaccardLangs calls keep one live persist each") {
+    val dir = fixtureDir()
+    try {
+      graft.Graft.clearAllCaches(spark)
+      val t3 = TextAnalysis.langId(spark, dir).collect().toSeq
+      val s2 = Sketches.kmvJaccardLangs(spark, dir).collect().toSeq
+      assert(t3.nonEmpty && s2.nonEmpty)
+      for (_ <- 1 to 3) {
+        assert(TextAnalysis.langId(spark, dir).collect().toSeq == t3,
+          "eviction must never change t3's rows")
+        assert(Sketches.kmvJaccardLangs(spark, dir).collect().toSeq == s2,
+          "eviction must never change s2's rows")
+        assert(TextAnalysis.livePersistCount(spark) == 1)
+        assert(Sketches.livePersistCount(spark) == 1)
+      }
+      graft.Graft.clearAllCaches(spark)
+      assert(TextAnalysis.livePersistCount(spark) == 0 &&
+        Sketches.livePersistCount(spark) == 0,
+        "clearAllCaches releases every registry")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 }
