@@ -1,10 +1,16 @@
 package graft.db
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, MapType, StructField, StructType}
+
+import scala.util.Using
 
 /** Merge-on-read keyed table: the O(batch) upsert path that replaces the
   * facade's default copy-on-write snapshot at scale (the "100 TB
@@ -58,35 +64,57 @@ import org.apache.spark.sql.types.StructType
   * versions are allocated from the directory listing plus the fold
   * ceiling.
   *
-  * Schema memo: every read of a file goes through [[readFile]], which
-  * infers the file's schema once per instance (a one-task Spark job per
-  * `spark.read.parquet`) and reads it again through
-  * `spark.read.schema(s)`, which submits no job. A file is never
-  * rewritten under its name — generations and deltas are created new,
-  * and a fold commits by renaming to a fresh name — except an orphan
-  * delta version: [[truncateAbove]] deletes it and the next commit
-  * writes that version again. So [[truncateAbove]] and [[gc]] drop the
-  * entries of the files they delete. A merged read therefore costs the
-  * same number of jobs however many pending deltas it has already read.
+  * Schema memo: every read of a file takes its schema from
+  * [[fileSchema]], filled once per instance from the file's parquet
+  * footer, read on the driver (no Spark job; `spark.read.parquet` would
+  * run a one-task inference job for it), and reads through
+  * `spark.read.schema(s)`, which submits no job either: [[readFile]]
+  * one file with all its columns, [[presentAt]] every file's key and
+  * `_deleted` in one relation. A file is never rewritten under its
+  * name — generations and deltas are created new, and a fold commits
+  * by renaming to a fresh name — except an orphan delta version:
+  * [[truncateAbove]] deletes it and the next commit writes that version
+  * again. So [[truncateAbove]] and [[gc]] drop the entries of the files
+  * they delete. Planning a merged read therefore submits no job,
+  * however many new deltas it reads.
   */
 class MorTable(spark: SparkSession, dir: String, keyCol: String) {
 
   private def fs: FileSystem =
     FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
 
-  /** Schema Spark inferred from each file this instance has read, by
-    * path. Only ever filled from the file itself: a writer's DataFrame
-    * may declare columns non-nullable, but tombstone rows are null in
-    * every non-key column.
+  /** Schema of each file this instance has read, by path. Only ever
+    * filled from the file itself: a writer's DataFrame may declare
+    * columns non-nullable, but tombstone rows are null in every non-key
+    * column.
     */
   private val fileSchemas =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  private def fileSchema(p: Path): StructType =
-    fileSchemas.computeIfAbsent(p.toString, f => spark.read.parquet(f).schema)
+  private[graft] def fileSchema(p: Path): StructType =
+    fileSchemas.computeIfAbsent(p.toString, _ => footerSchema(p))
 
-  /** The one way this table reads a base or delta file (see the schema
-    * memo in the class doc).
+  /** The schema `spark.read.parquet(p).schema` infers, read on the
+    * driver from the footer of the first part file: the Spark schema
+    * the writer stored in the footer, else the parquet schema
+    * converted, made nullable as Spark's file source makes it. Spark's
+    * inference runs a one-task job for the same footer.
+    */
+  private def footerSchema(p: Path): StructType = {
+    val part = fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath)
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      .sortBy(_.getName).headOption
+      .getOrElse(throw new IllegalStateException(
+        s"Unable to infer schema for Parquet at $p: it has no part file"))
+    val footer = Using.resource(ParquetFileReader.open(
+      HadoopInputFile.fromPath(part, spark.sparkContext.hadoopConfiguration)))(_.getFooter)
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(part, footer), new ParquetToSparkSchemaConverter(SQLConf.get))
+    MorTable.asNullable(schema).asInstanceOf[StructType]
+  }
+
+  /** One base or delta file with all its columns (see the schema memo
+    * in the class doc).
     */
   private def readFile(p: Path): DataFrame =
     spark.read.schema(fileSchema(p)).parquet(p.toString)
@@ -264,51 +292,41 @@ class MorTable(spark: SparkSession, dir: String, keyCol: String) {
     }
   }
 
-  /** The subset of `ids` (a small single-column relation on [[keyCol]])
-    * PRESENT in the merged snapshot as of `maxV` — [[readAt]]'s
-    * last-writer-wins resolution restricted to the requested keys
-    * before any heavy work (r17: `removeDocs`' presence check
-    * previously materialized the entire merged view — base anti-join,
-    * delta window, persist — to validate a ~10³-id list, and the
-    * remove's own commit then invalidated that cache). Here the base
-    * contributes via a column-pruned scan + broadcast semi join and the
-    * deltas are id-filtered BEFORE the LWW window, so cost is one
-    * key-column base scan plus the (tiny) delta files.
+  /** The subset of `ids` PRESENT in the merged snapshot as of `maxV`,
+    * resolved on the driver from one collect. The generation and the
+    * window's deltas are read as ONE relation of `(key, _deleted)` (null
+    * where a file has no `_deleted`: a base, a legacy delta), filtered
+    * to `ids`; each row's version comes from the name of the file it was
+    * read from (`_metadata.file_path`). So the plan has one scan however
+    * many deltas are pending, the same shape every time, and the rows
+    * shipped are at most the requested keys' writes. A key is present
+    * iff its newest version holds a live row; two live rows of one key
+    * at one version are a broken unique-keys invariant and raise an
+    * AssertionError (tombstones may repeat a key, see [[delete]]).
     */
-  def presentAt(maxV: Int, ids: DataFrame): DataFrame = {
+  def presentAt(maxV: Int, ids: Seq[Long]): Set[Long] = {
     healLegacy()
-    val gens = baseGenList()
-    val baseOpt = gens.filter(_._1 <= maxV).lastOption
+    val baseOpt = baseGenList().filter(_._1 <= maxV).lastOption
     val floor = baseOpt.map(_._1).getOrElse(0)
-    val deltaDfs = windowDeltaDfs(floor, maxV)
-    val idsOnly = ids.select(keyCol)
-    val baseHits = baseOpt.map { case (_, p) =>
-      readFile(p).select(keyCol)
-        .join(org.apache.spark.sql.functions.broadcast(idsOnly), Seq(keyCol), "left_semi")
-    }
-    if (deltaDfs.isEmpty)
-      return baseHits.getOrElse(idsOnly.limit(0))
-    val allDeltas = deltaDfs
-      .reduce(_ unionByName (_, allowMissingColumns = true))
-      .select(col(keyCol), col("_v"), col("_deleted"))
-      .join(org.apache.spark.sql.functions.broadcast(idsOnly), Seq(keyCol), "left_semi")
-    // same single-delta identity as [[readAt]] — no per-key window
-    val resolvedPresent =
-      if (deltaDfs.size == 1)
-        allDeltas.filter(!col("_deleted")).select(keyCol)
-      else {
-        val w = Window.partitionBy(keyCol).orderBy(col("_v").desc)
-        allDeltas
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1 && !col("_deleted"))
-          .select(keyCol)
-      }
-    baseHits match {
-      case None => resolvedPresent
-      case Some(b) =>
-        b.join(allDeltas.select(keyCol), Seq(keyCol), "left_anti")
-          .unionByName(resolvedPresent)
-    }
+    val files = baseOpt.toSeq ++
+      deltaPaths().filter { case (v, _) => v > floor && v <= maxV }
+    if (files.isEmpty || ids.isEmpty) return Set.empty
+    val versionOf = files.map { case (v, p) => p.getName -> v }.toMap
+    val schema = StructType(Seq(
+      fileSchema(files.head._2)(keyCol), StructField("_deleted", BooleanType)))
+    val writes = spark.read.schema(schema).parquet(files.map(_._2.toString): _*)
+      .filter(col(keyCol).isInCollection(ids.distinct))
+      .select(col(keyCol), col("_deleted"), col("_metadata.file_path"))
+      .collect()
+      .map(r => (r.getLong(0), versionOf(new Path(r.getString(2)).getParent.getName),
+        !r.isNullAt(1) && r.getBoolean(1)))
+    writes.groupBy(_._1).flatMap { case (k, kw) =>
+      val newest = kw.map(_._2).max
+      val live = kw.count { case (_, v, deleted) => v == newest && !deleted }
+      if (live > 1) throw new AssertionError(
+        s"key $k has $live live rows at version $newest of $dir: duplicated key")
+      if (live == 1) Some(k) else None
+    }.toSet
   }
 
   /** The merged view of ONLY the commits in `(floorExclusive, ceiling]`:
@@ -417,9 +435,8 @@ class MorTable(spark: SparkSession, dir: String, keyCol: String) {
     * A tombstone carries every column of the table's newest file (a
     * pending delta, else the live generation), null, so a later merged
     * read can union it with any file of the table. Those columns come
-    * from that file's memoized schema: no read of the table is planned,
-    * and the only job besides the write is the schema's inference if
-    * this instance has not read the file yet. A table with no file yet
+    * from that file's memoized footer schema: no read of the table is
+    * planned, and the write is the only job. A table with no file yet
     * has no live key; its tombstones carry the key alone.
     */
   def delete(ids: DataFrame): Int = {
@@ -507,4 +524,19 @@ class MorTable(spark: SparkSession, dir: String, keyCol: String) {
     * not count: they are not merged by live reads.
     */
   def deltaCount(): Int = deltaPaths().count(_._1 > foldCeiling())
+}
+
+object MorTable {
+
+  /** Every field, array element and map value nullable, as Spark's file
+    * source declares a file's schema (`StructType.asNullable` is
+    * private to Spark).
+    */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 }

@@ -1021,31 +1021,24 @@ class VectorDB private (
       .coalesce(math.max(1,
         ((ids.size + VectorDB.RemoveIdsPerFile - 1) /
           VectorDB.RemoveIdsPerFile).toInt))
-    // Presence check counted against the distinct id set (r17
-    // optimization, two steps). Step 1: the old `idDf ANTI codes`
-    // direction forced a sort-merge join that shuffled the ENTIRE hot
-    // tier to validate a tiny id list — an anti join can only build its
-    // right side, so the small side could never broadcast. Step 2 (MOR):
-    // even the broadcast-semi form against `codes` materialized AND
-    // persisted the full merged view, which this very commit then
-    // invalidates — [[MorTable.presentAt]] resolves last-writer-wins for
-    // the REQUESTED ids only (column-pruned base scan + id-filtered
-    // deltas), never touching the hot-tier cache. Both forms count
-    // exactly |ids ∩ live keys|.
+    // Presence check counted against the distinct id set. MOR:
+    // [[MorTable.presentAt]] collects the requested ids' writes from
+    // the committed files (one scan, one job) and resolves
+    // last-writer-wins on the driver, so it never builds the merged hot
+    // tier, which this very commit would invalidate; it raises on a key
+    // with two live rows at one version. COW: a broadcast semi join
+    // against `codes` (an anti join from `idDf` could only build its
+    // right side, so it would shuffle the whole tier), counted with
+    // countDistinct on the MATCHED side so a duplicated doc_id cannot
+    // push the count past the requested ids. Deferred to a function:
+    // the MOR path below runs it CONCURRENTLY with the tombstone writes
+    // — it reads only the COMMITTED ceilings, which neither the orphan
+    // truncation nor the (not-yet-committed) tombstone deltas can
+    // affect.
     val distinctIds = ids.distinct.size
-    // countDistinct on the MATCHED side, not a raw row count (ADVICE
-    // r17): if the hot tier ever held a duplicated doc_id (invariant
-    // violation), raw rows could exceed distinctIds, missing would go
-    // negative, and the not-in-index guard would be silently bypassed.
-    // Deferred to a function (r18): the MOR path below runs it
-    // CONCURRENTLY with the tombstone writes — it reads only the
-    // COMMITTED ceilings, which neither the orphan truncation nor the
-    // (not-yet-committed) tombstone deltas can affect.
     def presenceCheck(): Unit = {
       val matched =
-        if (isMor) codesMor.presentAt(committedCeilings()._1, idDf)
-          .agg(org.apache.spark.sql.functions.countDistinct("doc_id"))
-          .head().getLong(0)
+        if (isMor) codesMor.presentAt(committedCeilings()._1, ids).size.toLong
         else codes.select("doc_id")
           .join(org.apache.spark.sql.functions.broadcast(idDf), Seq("doc_id"), "left_semi")
           .agg(org.apache.spark.sql.functions.countDistinct("doc_id"))
@@ -1063,13 +1056,14 @@ class VectorDB private (
       // Each tier takes the tombstone's columns from its own newest
       // file's memoized schema, so neither `codes` nor `docs` is built.
       // THREE independent jobs overlapped (guide §2.6): the two tiers'
-      // tombstone writes on pool threads, the presence check on the
-      // caller thread. The commit point stays the `_committed` flip
-      // AFTER both writes AND the check pass; a failed check (id not
-      // in index) aborts before the flip, leaving at most INVISIBLE
+      // tombstone writes on pool threads, the presence check's collect
+      // on the caller thread. The commit point stays the `_committed`
+      // flip AFTER both writes AND the check pass; a failed check (id
+      // not in index) aborts before the flip, leaving at most INVISIBLE
       // orphan tombstone deltas — the same debris class as a crash
       // between the tier writes, truncated by the next commit (the
-      // lifecycle spec's failed-remove → compact sequence covers it).
+      // lifecycle spec's failed-remove → compact sequence and the
+      // failed-validation orphan spec cover it).
       beginMorCommit()
       val ((nc, nd), _) = VectorDB.tierParallel(
         VectorDB.tierParallel(

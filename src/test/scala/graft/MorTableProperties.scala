@@ -87,18 +87,16 @@ class MorTableProperties extends AnyFunSuite {
         assert(readMap(t.read()) == model,
           s"seed $seed: live read diverged from the model")
         // presentAt (the removeDocs presence check's id-restricted LWW
-        // resolution, r17) must agree with the model for every key in
-        // the domain plus a never-present probe — at the live ceiling
-        // AND at every pinned one
-        val probe = ((0L to 5L) :+ 99L).map(Tuple1(_)).toDF("id")
-        def presentSet(ceil: Int): Set[Long] =
-          t.presentAt(ceil, probe).collect().map(_.getLong(0)).toSet
-        assert(presentSet(t.versionCeiling()) == model.keySet,
+        // resolution) must agree with the model for every key in the
+        // domain plus a never-present probe and a repeated one — at the
+        // live ceiling AND at every pinned one
+        val probe = (0L to 5L) ++ Seq(99L, 3L)
+        assert(t.presentAt(t.versionCeiling(), probe) == model.keySet,
           s"seed $seed: presentAt(live) diverged from the model key set")
         pins.foreach { case (ceil, frozen) =>
           assert(readMap(t.readAt(ceil)) == frozen,
             s"seed $seed: pinned ceiling $ceil no longer reads its frozen view")
-          assert(presentSet(ceil) == frozen.keySet,
+          assert(t.presentAt(ceil, probe) == frozen.keySet,
             s"seed $seed: presentAt($ceil) diverged from the frozen key set")
         }
         // GC with no remaining pins: retention collapses to the

@@ -289,9 +289,8 @@ class MorVectorDBSpec extends AnyFunSuite {
   }
 
   test("a MOR removeDocs submits as many Spark jobs after 4 commit/delete cycles as after 1") {
-    // Inferring a file's schema is one Spark job. A delete that paid it
-    // again for every file it has already read would grow by a job per
-    // pending delta per read of the tier.
+    // A delete that paid a job per file of the tier (Spark's schema
+    // inference is one) would grow by a job per pending delta.
     val db = VectorDB.openOrCreate(spark, freshDir(), storage = VectorDB.StorageMor)
     db.addDocuments((1L to 40L).map(i => (i, s"doc number $i words")).toDF("doc_id", "text"))
     val jobs = (1 to 4).map { c =>
@@ -304,6 +303,8 @@ class MorVectorDBSpec extends AnyFunSuite {
     assert(db.pendingDeltas() == 9)
     assert(jobs.head == jobs.last,
       s"removeDocs jobs per cycle ${jobs.mkString(", ")}: must not grow with pending deltas")
+    // two tombstone writes and the presence check's one collect
+    assert(jobs.forall(_ <= 3), s"removeDocs jobs per cycle ${jobs.mkString(", ")}")
   }
 
   test("a second MorTable.readAt over files it has already read submits no job") {
@@ -313,7 +314,7 @@ class MorVectorDBSpec extends AnyFunSuite {
     t.upsert(Seq((3L, "c")).toDF("id", "v"))
     t.delete(Seq(Tuple1(1L)).toDF("id"))
     val ceil = t.versionCeiling()
-    assert(jobsOf(t.readAt(ceil)) > 0, "the first read infers each file's schema")
+    assert(jobsOf(t.readAt(ceil)) == 0, "a file's schema comes from its footer")
     var df: org.apache.spark.sql.DataFrame = null
     assert(jobsOf { df = t.readAt(ceil) } == 0)
     assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
@@ -350,6 +351,103 @@ class MorVectorDBSpec extends AnyFunSuite {
     db.removeDocs(Seq(1L))
     assert(db.count() == 1)
     assert(db.search("d e f", k = 1).head().getAs[Long]("doc_id") == 2L)
+  }
+
+  test("a MorTable reads from a file's footer the schema Spark infers from it") {
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    /** Every base/delta file under `dir`, checked; returns their schemas by name. */
+    def check(dir: String, keyCol: String): Map[String, org.apache.spark.sql.types.StructType] = {
+      val t = new MorTable(spark, dir, keyCol)
+      val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath)
+        .filter(p => p.getName.matches("(base|delta_v).*\\.parquet"))
+      assert(files.nonEmpty, dir)
+      files.map { p =>
+        val s = t.fileSchema(p)
+        assert(s == spark.read.parquet(p.toString).schema, p.toString)
+        p.getName -> s
+      }.toMap
+    }
+    val shapes = Seq(
+      (VectorDB.LayoutArray, VectorDB.IndexFlat),
+      (VectorDB.LayoutFlat, VectorDB.IndexFlat),
+      (VectorDB.LayoutArray, VectorDB.IndexIvf))
+    shapes.foreach { case (layout, index) =>
+      val db = VectorDB.openOrCreate(spark, freshDir(), storage = VectorDB.StorageMor,
+        layout = layout, index = index, ivfCells = 4)
+      db.addDocuments((1L to 30L).map(i => (i, s"doc $i words tok${i % 5}")).toDF("doc_id", "text"))
+      db.compact()                                                              // base_v1
+      db.addDocuments(Seq((40L, "an upserted doc")).toDF("doc_id", "text")) // delta_v2
+      db.removeDocs(Seq(1L, 2L))                                               // delta_v3
+      val codes = check(s"${db.folder}/codes.mor", "doc_id")
+      val docs = check(s"${db.folder}/docs.mor", "doc_id")
+      Seq(codes, docs).foreach(m =>
+        assert(Set("base_v1.parquet", "delta_v2.parquet", "delta_v3.parquet").subsetOf(m.keySet),
+          s"$layout/$index: ${m.keySet}"))
+      if (index == VectorDB.IndexIvf)
+        assert(codes("delta_v2.parquet").fieldNames.contains("cell"))
+    }
+    // a legacy delta without `_deleted` and the delta of an empty upsert
+    val dir = freshDir() + "/shapes"
+    val t = new MorTable(spark, dir, "id")
+    t.upsert(Seq((1L, "a")).toDF("id", "v"))
+    Seq((2L, "b")).toDF("id", "v").write.parquet(s"$dir/delta_v2.parquet")
+    t.upsert(Seq.empty[(Long, String)].toDF("id", "v"))
+    val legacy = check(dir, "id")
+    assert(legacy.keySet == Set("delta_v1.parquet", "delta_v2.parquet", "delta_v3.parquet"))
+    assert(!legacy("delta_v2.parquet").fieldNames.contains("_deleted"))
+    // a directory with no part file is an error, as spark.read.parquet makes it
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/delta_v4.parquet"))
+    intercept[IllegalStateException](t.fileSchema(new org.apache.hadoop.fs.Path(s"$dir/delta_v4.parquet")))
+  }
+
+  test("presentAt raises on two live rows of one key at one version, not on repeated tombstones") {
+    val dir = freshDir() + "/dup"
+    val t = new MorTable(spark, dir, "id")
+    t.upsert(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    t.compact()
+    t.delete(Seq(Tuple1(1L), Tuple1(1L)).toDF("id"))
+    // a legacy delta without `_deleted` holds live rows
+    Seq((5L, "e")).toDF("id", "v").write.parquet(s"$dir/delta_v3.parquet")
+    assert(t.presentAt(t.versionCeiling(), Seq(1L, 2L, 2L, 5L, 6L)) == Set(2L, 5L))
+    assert(t.presentAt(2, Seq(1L, 2L, 5L)) == Set(2L))
+    // breaks the unique-keys precondition of `upsert`
+    t.upsert(Seq((3L, "c"), (3L, "d")).toDF("id", "v"))
+    val e = intercept[AssertionError](t.presentAt(t.versionCeiling(), Seq(2L, 3L)))
+    assert(e.getMessage.contains("key 3 has 2 live rows"))
+  }
+
+  test("a failed-validation orphan is truncated before a later commit covers it") {
+    val db = VectorDB.openOrCreate(spark, freshDir(), storage = VectorDB.StorageMor)
+    db.addDocuments((1L to 6L).map(i => (i, s"doc $i words")).toDF("doc_id", "text"))
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def deltas(tier: String): Seq[String] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"${db.folder}/$tier"))
+        .map(_.getPath.getName).filter(_.startsWith("delta_v")).sorted.toSeq
+    // a delete naming one absent id: its tombstones are written while the
+    // presence check runs; then an add with a duplicate id, whose codes
+    // delta is written while its validation runs
+    val e = intercept[IllegalArgumentException](db.removeDocs(Seq(2L, 99L)))
+    assert(e.getMessage.contains("1 of 2 distinct ids"))
+    intercept[IllegalArgumentException] {
+      db.addDocuments(Seq((7L, "x y"), (7L, "z w")).toDF("doc_id", "text"))
+    }
+    assert(db.count() == 6)
+    db.addDocuments(Seq((8L, "p q r")).toDF("doc_id", "text"))
+    for (tier <- Seq("codes.mor", "docs.mor")) {
+      assert(deltas(tier) == Seq("delta_v1.parquet", "delta_v2.parquet"), tier)
+      val v2 = spark.read.parquet(s"${db.folder}/$tier/delta_v2.parquet")
+        .select("doc_id", "_deleted").as[(Long, Boolean)].collect().toSeq
+      assert(v2 == Seq((8L, false)), s"$tier/delta_v2 holds a failed op's rows: $v2")
+    }
+    assert(db.count() == 7)
+    db.removeDocs(Seq(2L))
+    assert(db.count() == 6, "the failed delete's live id is still live")
+
+    // a repeated id is one delete
+    db.removeDocs(Seq(3L, 3L))
+    assert(db.count() == 5)
+    intercept[IllegalArgumentException](db.removeDocs(Seq(3L)))
+    assert(db.count() == 5)
   }
 
   /** The single-delta last-writer-wins shortcut in `MorTable` (a window
