@@ -1,8 +1,11 @@
 #!/bin/bash
-# Standing stress check for the MOR commit path: run the three suites
-# that pin its concurrency claims N times (default 5) and report each
-# iteration. Exits non-zero if any iteration failed. Run it before
-# merging any change to VectorDB's commit path or MorTable's read path,
+# Standing stress check for the MOR commit path and the serving tier's
+# block lifetime: run the suites that pin their concurrency claims N
+# times (default 5) and report each iteration. Served blocks are
+# lineage-free, so their lifetime rests on the pin protocol that
+# SharedBlocksSpec and IncrementalServingSpec exercise. Exits non-zero
+# if any iteration failed. Run it before merging any change to
+# VectorDB's commit path, its serving tier or MorTable's read path,
 # ideally with background load (e.g. a benchmark draw) on the box.
 #
 #   scripts/stress_commit_path.sh [N]
@@ -14,7 +17,7 @@ cd "$(dirname "$0")/.."
 n="${1:-5}"
 logs="${STRESS_LOG_DIR:-$(mktemp -d -t stress_commit_path.XXXXXX)}"
 mkdir -p "$logs"
-suites="graft.ConcurrentReadWriteSpec graft.WriterLeaseHammerSpec graft.CrossJvmSpec"
+suites="graft.ConcurrentReadWriteSpec graft.WriterLeaseHammerSpec graft.CrossJvmSpec graft.SharedBlocksSpec graft.IncrementalServingSpec"
 echo "[stress] $n iterations of: $suites (logs in $logs)"
 fails=0
 for i in $(seq 1 "$n"); do

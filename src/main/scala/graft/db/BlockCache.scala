@@ -24,10 +24,11 @@ package graft.db
   * Lifecycle: [[acquire]] returns the live entry for (key, version) or
   * builds one (refcount 1); [[release]] decrements and unpersists at
   * zero — so a superseded snapshot's blocks survive exactly until the
-  * last instance still serving it refreshes, and `disableServing` on
-  * the only holder frees the memory as before. Entries whose
-  * SparkContext has stopped are rebuilt, not returned (test suites
-  * restart sessions).
+  * last instance still serving it refreshes and its last in-flight
+  * search ends, and `disableServing` on the only holder frees the
+  * memory as before. Entries whose SparkContext has stopped are
+  * rebuilt, not returned (test suites restart sessions); an entry whose
+  * blocks were lost is [[evict]]ed, and the next search rebuilds it.
   */
 private[graft] object BlockCache {
 
@@ -188,16 +189,38 @@ private[graft] object BlockCache {
       }
     }
 
-  /** Drop one reference; unpersist and forget the entry at zero. */
-  def release(key: Key, version: String): Unit = synchronized {
+  /** Drop one reference on `scan`; unpersist and forget the entry at
+    * zero. The unpersist waits for the scan's in-flight served jobs
+    * ([[PreparedScan.unpersist]]). A no-op when the entry no longer
+    * holds `scan` ([[evict]]ed after a block loss): the holder's
+    * reference went with the eviction, and a rebuilt entry under the
+    * same version must not lose one of its own.
+    */
+  def release(key: Key, version: String, scan: PreparedScan): Unit = synchronized {
     val e = entries.get((key, version))
-    if (e != null) {
+    if (e != null && (e.scan eq scan)) {
       e.refs -= 1
       if (e.refs <= 0) {
         entries.remove((key, version))
         if (e.scan.isAlive) e.scan.unpersist()
       }
     }
+  }
+
+  /** Forget whichever entry of `key` holds `scan`, whatever its
+    * refcount, and unpersist it (deferred past its in-flight jobs): its
+    * blocks are lost, so every holder must rebuild rather than share it.
+    * Holders drop their now-dangling reference when a pin on it fails.
+    */
+  def evict(key: Key, scan: PreparedScan): Unit = {
+    synchronized {
+      val it = entries.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (e.getKey._1 == key && (e.getValue.scan eq scan)) it.remove()
+      }
+    }
+    scan.unpersist()
   }
 
   /** Snapshot versions with a live referenced entry for `folder` in

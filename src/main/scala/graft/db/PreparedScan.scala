@@ -1,6 +1,6 @@
 package graft.db
 
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{RDD, UnionRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{array, col}
 import org.apache.spark.storage.StorageLevel
@@ -37,9 +37,23 @@ import org.apache.spark.storage.StorageLevel
   * cell set; a probed-cell query skips whole blocks whose cells don't
   * intersect the probe set (the RDD analogue of the cell-partitioned
   * snapshot's partition pruning) and filters rows inside mixed blocks.
+  *
+  * Lineage: every layer is `localCheckpoint`ed in the job that
+  * materializes it, so a served job ships the resident blocks and
+  * nothing of the plans that built them (the build's SQL file scan, a
+  * chain layer's local-relation window) — per-query work stays the scan,
+  * as in the reference. The price is that a block can no longer be
+  * recomputed: its lifetime is explicit. Each served job pins the scan
+  * ([[tryPin]]/[[unpin]]), so [[unpersist]] under in-flight jobs frees
+  * the blocks when the last of them ends; a block lost anyway (executor
+  * loss) fails the job with a [[PreparedScan.lostBlock]] error, and the
+  * owner rebuilds the tier instead of recomputing it.
   */
 final class PreparedScan private (
-    private val blocks: RDD[PreparedScan.Block],
+    /** The resident block RDDs, one per chain layer (a full build is
+      * one layer); a query scans their union in one job.
+      */
+    private val layers: Vector[RDD[PreparedScan.Block]],
     private val nWords: Int,
     private val supBc: org.apache.spark.broadcast.Broadcast[PreparedScan.Superseded],
     private[graft] val chain: PreparedScan.ChainInfo,
@@ -52,6 +66,22 @@ final class PreparedScan private (
       */
     private[graft] val rowsLowerBound: Long,
     onFree: () => Unit) {
+
+  /** What a query's job runs over: the layers as ONE union (a chain of
+    * any depth is one flat `UnionRDD`, not a union nested per layer).
+    */
+  private[graft] val blocks: RDD[PreparedScan.Block] =
+    if (layers.size == 1) layers.head
+    else new UnionRDD(layers.head.sparkContext, layers)
+
+  /** Served jobs in flight on these blocks, or [[PreparedScan.Freed]]
+    * once they are freed. One atomic per search.
+    */
+  private val pins = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Set by [[unpersist]]: no new pin is granted; the free runs when the
+    * count reaches zero.
+    */
+  @volatile private var retired = false
 
   /** Serving block count (one per source partition; chains add their
     * delta-layer blocks). Diagnostic — the facade's sizing guard reads
@@ -185,18 +215,64 @@ final class PreparedScan private (
   /** Free what this scan OWNS: a full build unpersists its block RDD; a
     * chain extension unpersists its own delta layer and drops its
     * reference on the base scan (cascading down the chain as refcounts
-    * reach zero).
+    * reach zero). Under pinned jobs the free is deferred to the last
+    * [[unpin]]: the blocks cannot be recomputed, so freeing them under a
+    * running job would fail it.
     */
-  def unpersist(): Unit = onFree()
+  def unpersist(): Unit = {
+    retired = true
+    freeIfIdle()
+  }
 
-  /** False once the owning SparkContext has stopped (the blocks died
-    * with it); [[BlockCache]] rebuilds instead of returning such an
-    * entry.
+  /** Take a pin for one served job; false once [[unpersist]] was called
+    * (the caller resolves the serving tier again). Every true must be
+    * matched by one [[unpin]].
     */
-  private[db] def isAlive: Boolean = !blocks.sparkContext.isStopped
+  private[graft] def tryPin(): Boolean = {
+    var n = pins.get()
+    while (n >= 0 && !retired) {
+      if (pins.compareAndSet(n, n + 1)) return true
+      n = pins.get()
+    }
+    false
+  }
+
+  private[graft] def unpin(): Unit =
+    if (pins.decrementAndGet() == 0 && retired) freeIfIdle()
+
+  private def freeIfIdle(): Unit =
+    if (pins.compareAndSet(0, PreparedScan.Freed)) onFree()
+
+  /** False once this scan was released ([[unpersist]]) or the owning
+    * SparkContext has stopped (the blocks died with it); [[BlockCache]]
+    * rebuilds instead of returning such an entry.
+    */
+  private[db] def isAlive: Boolean = !retired && !blocks.sparkContext.isStopped
 }
 
 object PreparedScan {
+
+  private val Freed = Int.MinValue
+
+  /** True when `e` is a served job failing on a resident block that is
+    * gone (its executor was lost, or the blocks were unpersisted
+    * elsewhere): the localCheckpoint'ed layer has no lineage to
+    * recompute it from.
+    */
+  private[graft] def lostBlock(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).exists(t =>
+      String.valueOf(t.getMessage).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"))
+
+  /** Make freshly built blocks resident and lineage-free: persist, mark
+    * for local checkpointing, then materialize (one job, which also
+    * counts the rows). After it the RDD's only dependency is its own
+    * cached blocks, so a query job serializes none of the build's plan.
+    */
+  private def resident(blocks: RDD[Block]): (RDD[Block], Long) = {
+    blocks.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
+    try (blocks, materializedRows(blocks))
+    catch { case t: Throwable => blocks.unpersist(); throw t }
+  }
 
   /** One ranked scan hit. `words` is the row's packed code; `bytes` its
     * int8 embedding and `doc` its payload — null unless the scan was
@@ -516,18 +592,18 @@ object PreparedScan {
             chain: ChainInfo = ChainInfo.none,
             navStore: Option[NavStore] = None,
             blockStore: Option[BlockStore] = None): PreparedScan = {
-    val blocks = blockify(codes, nWords, isFlat, isIvf, withBytes, withDoc,
-      navBuilder, layer = 0, navStore = navStore, blockStore = blockStore)
     // One job materializes eagerly (serving opts into RAM residency)
     // AND counts the rows; a chain's churn policy reads the count too.
-    val rows = materializedRows(blocks)
+    val (blocks, rows) = resident(blockify(codes, nWords, isFlat, isIvf,
+      withBytes, withDoc, navBuilder, layer = 0, navStore = navStore,
+      blockStore = blockStore))
     // Manifest LAST, driver-side, only once every block file landed —
     // its presence is the warm path's all-or-nothing gate. It records
     // the chain's MOR ceilings/folds: the snapshot window floor a warm
     // RESTART extends from ((0,0)s under COW — never a seed).
     blockStore.foreach(_.writeManifestIfComplete(blocks.getNumPartitions,
       rows, chain.morCeilings, chain.morFolds))
-    new PreparedScan(blocks, nWords, null, chain.copy(baseRows = rows),
+    new PreparedScan(Vector(blocks), nWords, null, chain.copy(baseRows = rows),
       rows, () => blocks.unpersist())
   }
 
@@ -561,14 +637,13 @@ object PreparedScan {
           }
         }.orNull
         Iterator.single(blk.copy(nav = nav))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
+      }
       try {
-        val rows = materializedRows(blocks)
-        Some(new PreparedScan(blocks, nWords, null, chain.copy(baseRows = rows),
+        val (_, rows) = resident(blocks)
+        Some(new PreparedScan(Vector(blocks), nWords, null, chain.copy(baseRows = rows),
           rows, () => blocks.unpersist()))
       } catch {
         case scala.util.control.NonFatal(e) =>
-          blocks.unpersist(blocking = false)
           org.slf4j.LoggerFactory.getLogger(classOf[PreparedScan]).warn(
             s"persisted serving blocks rejected (falling back to a full " +
               s"build): $e")
@@ -599,9 +674,10 @@ object PreparedScan {
     * Ownership: the new scan holds the ONE reference on `base` its
     * owner transferred (released through `onBaseFree` when the new scan
     * is freed) and owns its delta layer RDD. Scale note: delta blocks
-    * compute from the window's delta files (bounded), and base blocks
-    * stay cached where they are — an extension never re-materializes,
-    * re-caches, or shuffles the base tier.
+    * are built once from the window (bounded) and checkpointed like the
+    * base's; the chain scans all layers as one flat union, and base
+    * blocks stay cached where they are — an extension never
+    * re-materializes, re-caches, or shuffles the base tier.
     */
   def extend(base: PreparedScan, windowRows: DataFrame,
              touched: Array[Long], nWords: Int, isFlat: Boolean,
@@ -610,18 +686,17 @@ object PreparedScan {
              newCeilings: (Int, Int),
              onBaseFree: () => Unit): PreparedScan = {
     val layer = base.chain.depth + 1
-    val delta = blockify(windowRows, nWords, isFlat, isIvf, withBytes,
-      withDoc, navBuilder, layer)
-    val deltaRows = materializedRows(delta) // before the layer can serve
+    // materialized before the layer can serve
+    val (delta, deltaRows) = resident(blockify(windowRows, nWords, isFlat,
+      isIvf, withBytes, withDoc, navBuilder, layer))
     val prevSup = if (base.supBc == null) null else base.supBc.value
     val merged = Superseded.merge(prevSup, touched, layer)
     val supB = delta.sparkContext.broadcast(merged)
-    val blocks = base.blocks.union(delta)
     val chain = ChainInfo(layer, base.chain.baseRows,
       base.chain.churnRows + touched.length, newCeilings,
       base.chain.morFolds)
     val lb = deltaRows + math.max(0L, base.rowsLowerBound - touched.length)
-    new PreparedScan(blocks, nWords, supB, chain, lb, () => {
+    new PreparedScan(base.layers :+ delta, nWords, supB, chain, lb, () => {
       delta.unpersist()
       supB.unpersist()
       onBaseFree()
@@ -648,7 +723,7 @@ object PreparedScan {
       base.chain.churnRows + touched.length, newCeilings,
       base.chain.morFolds)
     val lb = math.max(0L, base.rowsLowerBound - touched.length)
-    new PreparedScan(base.blocks, nWords = base.nWords, supB, chain, lb, () => {
+    new PreparedScan(base.layers, nWords = base.nWords, supB, chain, lb, () => {
       supB.unpersist()
       onBaseFree()
     })
@@ -662,8 +737,8 @@ object PreparedScan {
       (it: Iterator[Block]) => it.map(_.ids.length.toLong).sum).sum
 
   /** Shared block construction: each source partition becomes one block
-    * with `layer` baked in; persisted (NOT yet materialized — callers
-    * count()).
+    * with `layer` baked in (NOT yet persisted or materialized — callers
+    * make it [[resident]]).
     */
   private def blockify(codes: DataFrame, nWords: Int, isFlat: Boolean,
                        isIvf: Boolean, withBytes: Boolean, withDoc: Boolean,
@@ -751,6 +826,6 @@ object PreparedScan {
       blockStore.foreach(
         _.trySaveBlock(org.apache.spark.TaskContext.getPartitionId(), blk))
       Iterator.single(blk)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    }
   }
 }

@@ -363,18 +363,16 @@ class VectorDB private (
     * against the live arrays.
     *
     * Versions still pinned by a live [[BlockCache]] entry in this JVM
-    * are KEPT: a warm-loaded scan's partitions recompute from their
-    * `_blocks` files ([[PreparedScan.loadPersisted]]), so deleting the
-    * dir under a pinned scan would turn a storage-loss recompute into a
-    * permanent [[PreparedScan.BlockLoadFailed]] — unlike the cold
-    * path, whose lineage reads the retained versioned parquet. Kept
-    * names are remembered and re-swept by THIS writer once the serving
+    * are KEPT. This dates from when a warm-loaded scan's lost
+    * partitions recomputed from their `_blocks` files; served blocks are
+    * now lineage-free and a lost one rebuilds the tier at the current
+    * version ([[withServedScan]]), so the deferral no longer protects a
+    * read. Kept names are remembered and re-swept by THIS writer once the serving
     * refresh releases the old reference ([[retryDeferredNavSweep]]) —
     * only the committer deletes, so a lagging reader can never sweep a
     * version newer than the one it has seen. (Another APPLICATION
     * pinning the old version is outside this registry — same cross-JVM
-    * snapshot contract as the marker cache itself; its recompute falls
-    * back to a full rebuild at its next serve-enable.)
+    * snapshot contract as the marker cache itself.)
     *
     * Under MOR + incremental serving ONE additional non-current dir is
     * RETAINED — the newest complete build ([[warmRestartSeed]]): it is
@@ -923,7 +921,7 @@ class VectorDB private (
         val statsRow = embedded.select(
           F.count(lit(1)), countDistinct(col("doc_id")),
           F.count(lit(1)) - F.count(col("doc_id")),
-          max(array_max(transform(col("embedding"), x => abs(x)))).cast("double"))
+          max(Kernels.maxAbsElem(col("embedding"))).cast("double"))
           .head()
         val nRows = statsRow.getLong(0)
         val nIds = statsRow.getLong(1)
@@ -1258,10 +1256,10 @@ class VectorDB private (
     discardAbsorbed()
     prepared.foreach { case (v, ps) =>
       if (incServingChurnFrac > 0 && isMor && servingEnabled && ps.isAlive) {
-        pendingPrevServing.foreach { case (ov, _) => BlockCache.release(cacheKey, ov) }
+        pendingPrevServing.foreach { case (ov, ops) => BlockCache.release(cacheKey, ov, ops) }
         pendingPrevServing = Some((v, ps))
         pendingPrevCommits = 0
-      } else BlockCache.release(cacheKey, v)
+      } else BlockCache.release(cacheKey, v, ps)
     }
     prepared = None
     // The stash pins a full serving tier in executor memory until the
@@ -1278,7 +1276,7 @@ class VectorDB private (
         (codesMor.foldCeiling(), docsMor.foldCeiling()) != ps.chain.morFolds
       if (!ps.isAlive || foldMoved ||
           pendingPrevCommits > VectorDB.IncServingStashMaxCommits) {
-        BlockCache.release(cacheKey, ov)
+        BlockCache.release(cacheKey, ov, ps)
         pendingPrevServing = None
         pendingPrevCommits = 0
       }
@@ -1441,7 +1439,7 @@ class VectorDB private (
     */
   def incrementalServingOff(): this.type = synchronized {
     incServingChurnFrac = 0.0
-    pendingPrevServing.foreach { case (v, _) => BlockCache.release(cacheKey, v) }
+    pendingPrevServing.foreach { case (v, ps) => BlockCache.release(cacheKey, v, ps) }
     pendingPrevServing = None
     discardAbsorbed()
     this
@@ -1449,9 +1447,9 @@ class VectorDB private (
 
   def disableServing(): Unit = synchronized {
     servingEnabled = false
-    prepared.foreach { case (v, _) => BlockCache.release(cacheKey, v) }
+    prepared.foreach { case (v, ps) => BlockCache.release(cacheKey, v, ps) }
     prepared = None
-    pendingPrevServing.foreach { case (v, _) => BlockCache.release(cacheKey, v) }
+    pendingPrevServing.foreach { case (v, ps) => BlockCache.release(cacheKey, v, ps) }
     pendingPrevServing = None
     discardAbsorbed()
     retryDeferredNavSweep()
@@ -1521,13 +1519,56 @@ class VectorDB private (
                 // entry already existed so the builder never ran):
                 // release the held-back reference.
                 if (!stashAdopted)
-                  stash.foreach { case (v, _) => BlockCache.release(cacheKey, v) }
+                  stash.foreach { case (v, ps) => BlockCache.release(cacheKey, v, ps) }
                 retryDeferredNavSweep()
               }
             case None => None
           }
         }
       }
+    }
+  }
+
+  /** Run one served job on the current serving tier under a pin
+    * ([[PreparedScan.tryPin]]), so a commit, an absorb swap or
+    * [[disableServing]] racing it defers the blocks' unpersist until the
+    * job ends. A scan already freed when the pin is asked for is
+    * resolved again. A job that fails on a lost resident block
+    * ([[PreparedScan.lostBlock]] — the blocks are lineage-free, so Spark
+    * cannot recompute them) evicts that tier and runs once more on a
+    * rebuilt one, as the warm path falls back on
+    * [[PreparedScan.BlockLoadFailed]]. None when serving is off or the
+    * DB is empty.
+    */
+  private def withServedScan[T](job: PreparedScan => T): Option[T] = {
+    var rebuilt = false
+    var out: Option[T] = None
+    var done = false
+    while (!done) preparedScan() match {
+      case None => done = true
+      case Some(ps) if ps.tryPin() =>
+        try { out = Some(job(ps)); done = true }
+        catch {
+          case scala.util.control.NonFatal(e)
+              if !rebuilt && PreparedScan.lostBlock(e) =>
+            rebuilt = true
+            VectorDB.log.warn(
+              s"serving blocks lost, rebuilding the serving tier: $e")
+            BlockCache.evict(cacheKey, ps)
+            dropPrepared(ps)
+        } finally ps.unpin()
+      case Some(ps) => dropPrepared(ps) // freed between resolution and pin
+    }
+    out
+  }
+
+  /** Let go of `ps` if it is still this instance's served tier. */
+  private def dropPrepared(ps: PreparedScan): Unit = synchronized {
+    prepared match {
+      case Some((v, cur)) if cur eq ps =>
+        BlockCache.release(cacheKey, v, ps)
+        prepared = None
+      case _ =>
     }
   }
 
@@ -1560,7 +1601,8 @@ class VectorDB private (
           val shared = BlockCache.offer(cacheKey,
             BlockCache.absorbedVersion(v), ascan)
           if (!(shared eq ascan)) ascan.unpersist() // lost the offer race
-          BlockCache.release(cacheKey, v) // drop the chain reference
+          prepared.foreach { case (_, chain) =>
+            BlockCache.release(cacheKey, v, chain) } // drop the chain reference
           prepared = Some((BlockCache.absorbedVersion(v), shared))
           Some(shared)
         case Some((av, ascan)) =>
@@ -1813,9 +1855,8 @@ class VectorDB private (
     * touched set and cumulative churn stay bounded — and any
     * ineligibility falls back to the cold build, so the path is never
     * wrong, only absent. The loaded base registers in [[BlockCache]]
-    * under ITS version (the chain's partitions recompute from those
-    * block files — the sweep must keep pinning them), and the chain
-    * holds that reference exactly like a live refresh's stash.
+    * under ITS version, and the chain holds that reference exactly like
+    * a live refresh's stash.
     */
   private def tryWarmChainRestart(nav: Option[NavBuilder],
                                   confProps: Array[(String, String)])
@@ -1865,7 +1906,7 @@ class VectorDB private (
         val ext = tryExtendServing(u, b)
         lastWarmRestartTimings = Some(
           ((tSeed1 - tSeed0) / 1e6, (System.nanoTime() - tSeed1) / 1e6))
-        if (ext.isEmpty) BlockCache.release(cacheKey, u)
+        if (ext.isEmpty) BlockCache.release(cacheKey, u, b)
         else VectorDB.log.info(
           s"warm chain restart: loaded persisted blocks of $u " +
             s"(${if (loaded) "from disk" else "resident"}) and adopted " +
@@ -1937,7 +1978,7 @@ class VectorDB private (
         // .extendDeleteOnly; the crawl-loop delete regime).
         PreparedScan.extendDeleteOnly(prev, touched,
           newCeilings = (cc1, dc1),
-          onBaseFree = () => BlockCache.release(cacheKey, prevVersion))
+          onBaseFree = () => BlockCache.release(cacheKey, prevVersion, prev))
       else {
         val nParts = math.max(1L, math.min(64L,
           (touched.length.toLong + VectorDB.IncServingRowsPerBlock - 1) /
@@ -1956,7 +1997,7 @@ class VectorDB private (
           withBytes = true, withDoc = true,
           navBuilder = indexStrategy.navBuilder(strategyCtx),
           newCeilings = (cc1, dc1),
-          onBaseFree = () => BlockCache.release(cacheKey, prevVersion))
+          onBaseFree = () => BlockCache.release(cacheKey, prevVersion, prev))
       }
     Some(out)
   }
@@ -2083,9 +2124,9 @@ class VectorDB private (
   def searchVector(q: Seq[Double], k: Int = 10, binaryOversample: Int = 10,
                    int8Oversample: Int = 3, nprobe: Int = Int.MaxValue): DataFrame = {
     validateSearch(k, binaryOversample, int8Oversample, nprobe)
-    preparedScan() match {
-      case Some(ps) =>
-        hitsToDf(servedHits(ps, q, k, binaryOversample, int8Oversample, nprobe, None))
+    withServedScan(ps =>
+      servedHits(ps, q, k, binaryOversample, int8Oversample, nprobe, None)) match {
+      case Some(hits) => hitsToDf(hits)
       case None =>
         catalystFunnel(q, k, binaryOversample, int8Oversample, nprobe, None)
     }
@@ -2131,9 +2172,9 @@ class VectorDB private (
                         binaryOversample: Int, int8Oversample: Int,
                         nprobe: Int): DataFrame = {
     validateSearch(k, binaryOversample, int8Oversample, nprobe)
-    preparedScan() match {
-      case Some(ps) =>
-        hitsToDf(servedHits(ps, q, k, binaryOversample, int8Oversample, nprobe, Some(sel)))
+    withServedScan(ps =>
+      servedHits(ps, q, k, binaryOversample, int8Oversample, nprobe, Some(sel))) match {
+      case Some(hits) => hitsToDf(hits)
       case None =>
         catalystFunnel(q, k, binaryOversample, int8Oversample, nprobe, Some(sel.pred))
     }
@@ -2155,9 +2196,9 @@ class VectorDB private (
                  int8Oversample: Int = 3, nprobe: Int = Int.MaxValue,
                  sel: Option[DocSelector] = None): Seq[VectorDB.SearchHit] = {
     validateSearch(k, binaryOversample, int8Oversample, nprobe)
-    preparedScan() match {
-      case Some(ps) =>
-        servedHits(ps, q, k, binaryOversample, int8Oversample, nprobe, sel)
+    withServedScan(ps =>
+      servedHits(ps, q, k, binaryOversample, int8Oversample, nprobe, sel)) match {
+      case Some(hits) => hits
       case None =>
         val df = catalystFunnel(q, k, binaryOversample, int8Oversample, nprobe,
           sel.map(_.pred))
@@ -2189,10 +2230,9 @@ class VectorDB private (
     require(radius >= 0, s"radius must be >= 0, got $radius")
     requireNonEmpty()
     val qWords = graft.operators.Search.packQuery(q)
-    preparedScan() match {
-      case Some(ps) =>
-        ps.withinRadius(qWords.toArray, radius, None, sel.map(_.idSet))
-          .map(h => (h.id, h.hamming)).toIndexedSeq
+    withServedScan(ps =>
+      ps.withinRadius(qWords.toArray, radius, None, sel.map(_.idSet))) match {
+      case Some(hits) => hits.map(h => (h.id, h.hamming)).toIndexedSeq
       case None =>
         val hammingCol =
           if (isFlat) (0 until nWords).map(i =>
@@ -2617,10 +2657,10 @@ class VectorDB private (
     require(queries.nonEmpty, "searchManyHits needs at least one query")
     require(queries.map(_._1).distinct.size == queries.size,
       "searchManyHits qids must be distinct")
-    preparedScan() match {
-      case Some(ps) =>
-        servedManyHits(ps, queries, k, binaryOversample, int8Oversample,
-          nprobe, sel)
+    withServedScan(ps =>
+      servedManyHits(ps, queries, k, binaryOversample, int8Oversample,
+        nprobe, sel)) match {
+      case Some(hits) => hits
       case None =>
         val df = searchMany(queries, k, binaryOversample, int8Oversample,
           nprobe, sel)
@@ -2691,10 +2731,11 @@ class VectorDB private (
     // map-side (HammingTopKCodeAgg) and the cold tier serves phase III.
     // Bit-identical either way (PreparedScanSpec pins the batched
     // parity across layouts and IVF probing).
-    preparedScan() match {
-      case Some(ps) =>
-        val out = servedManyHits(ps, queries, k, binaryOversample,
-          int8Oversample, nprobe, sel).flatMap { case (qid, hits) =>
+    withServedScan(ps =>
+      servedManyHits(ps, queries, k, binaryOversample, int8Oversample,
+        nprobe, sel)) match {
+      case Some(perQuery) =>
+        val out = perQuery.flatMap { case (qid, hits) =>
           hits.zipWithIndex.map { case (h, i) =>
             (qid, i + 1, h.docId, h.scoreHamming, h.scoreBinary,
               h.scoreCossim, h.doc) }

@@ -136,6 +136,15 @@ object Kernels {
   /** Q2: float vector → int8 bytes, symmetric linear scale by maxAbs. */
   def int8(v: Column, maxAbs: Column): Column = call_function("graft_int8", v, maxAbs)
 
+  /** max |x| over one vector, the per-row term of the int8 calibration
+    * max, from codegen'd builtins: `greatest(array_max(v), -array_min(v))`.
+    * The form it replaces, `array_max(transform(v, x => abs(x)))`,
+    * evaluates an interpreted lambda per element. The outer `abs` only
+    * maps an all-zero vector's -0.0 to 0.0, as the per-element `abs`
+    * did; NaN and ±Inf come out the same (KernelsSpec pins it).
+    */
+  def maxAbsElem(v: Column): Column = abs(greatest(array_max(v), -array_min(v)))
+
   /** Dot of float/double query against an int8 binary column. */
   def dotInt8(q: Column, bytes: Column): Column = call_function("graft_dot_int8", q, bytes)
 

@@ -109,7 +109,7 @@ object Search {
   def maxAbs(spark: SparkSession, dir: String): Double =
     maxAbsCache.getOrElseUpdate((spark, dir),
       packedEmb(spark, dir)
-        .select(max(array_max(transform(col("embedding"), x => abs(x)))).cast("double"))
+        .select(max(Kernels.maxAbsElem(col("embedding"))).cast("double"))
         .head().getDouble(0))
 
   /** The three-phase coarse-to-fine funnel (O8→O9→O10) for one query

@@ -136,4 +136,43 @@ class KernelsSpec extends AnyFunSuite {
     assert(exact.toSet == full.toSet || (exact.toSet -- full.toSet).size <= 2,
       "near-full oversampling should recover (almost) the exact top-k")
   }
+
+  test("maxAbsElem equals the per-element abs max it replaced, so int8 calibration is unchanged") {
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    val groups: Seq[(String, Seq[Seq[Double]])] = Seq(
+      "negative-dominant" -> Seq(Seq(-5.0, 1.0, 2.0), Seq(-0.75, 0.5, -0.25)),
+      "positive-dominant" -> Seq(Seq(-1.0, 3.0, 0.5), Seq(0.25, -0.125, 2.5)),
+      "all +-0.0" -> Seq(Seq(0.0, -0.0), Seq(-0.0, -0.0), Seq(-0.0), Seq(0.0)),
+      "+-Inf" -> Seq(Seq(1.0, -inf), Seq(inf, -2.0), Seq(-inf, inf)),
+      "NaN" -> Seq(Seq(nan, 1.0), Seq(-1.0, nan), Seq(-inf, nan, -0.0)),
+      "empty" -> Seq(Seq.empty[Double]))
+    val rows = groups.flatMap { case (g, vs) => vs.map(v => (g, v)) }
+    val old = (v: org.apache.spark.sql.Column) => array_max(transform(v, x => abs(x)))
+    // Boxed equals: NaN equals NaN, and 0.0 differs from -0.0.
+    def same(a: Any, b: Any): Boolean = java.util.Objects.equals(a, b)
+    for (elem <- Seq("double", "float")) {
+      val df = rows.toDF("g", "v0").select(col("g"), col("v0").cast(s"array<$elem>").as("v"))
+        .union(Seq(("null", null: Seq[Double])).toDF("g", "v0")
+          .select(col("g"), col("v0").cast(s"array<$elem>").as("v")))
+      df.select(col("v"), old(col("v")), Kernels.maxAbsElem(col("v"))).collect()
+        .foreach { r =>
+          assert(same(r.get(1), r.get(2)),
+            s"$elem row ${r.get(0)}: old ${r.get(1)} vs new ${r.get(2)}")
+        }
+      // The calibration scalar as the commit's stats query takes it, per
+      // group, and the int8 bytes each would store.
+      val maxes = df.groupBy("g").agg(
+        max(old(col("v"))).cast("double").as("o"),
+        max(Kernels.maxAbsElem(col("v"))).cast("double").as("n"))
+      maxes.collect().foreach { r =>
+        assert(same(r.get(1), r.get(2)), s"$elem group ${r.get(0)}: ${r.get(1)} vs ${r.get(2)}")
+      }
+      val bytes = df.join(maxes, "g").select(
+        col("g"), Kernels.int8(col("v"), col("o")), Kernels.int8(col("v"), col("n")))
+      bytes.collect().foreach { r =>
+        assert(java.util.Objects.deepEquals(r.get(1), r.get(2)), s"$elem group ${r.get(0)}")
+      }
+    }
+  }
 }

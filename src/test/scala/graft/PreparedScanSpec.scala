@@ -197,4 +197,39 @@ class PreparedScanSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a served scan ships the resident blocks, not the plans that built them") {
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+      r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val buildRdds = Set("SQLExecutionRDD", "FileScanRDD", "ParallelCollectionRDD")
+    def taskBytes(ps: PreparedScan): Int =
+      org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+        .serialize(ps.blocks).limit()
+    def assertLineageFree(ps: PreparedScan, what: String): Unit = {
+      val built = lineage(ps.blocks).map(_.getClass.getSimpleName).filter(buildRdds)
+      assert(built.isEmpty, s"$what scan still carries its build lineage: $built")
+    }
+    val db = VectorDB.openOrCreate(spark, freshDir(), storage = VectorDB.StorageMor)
+      .incrementalServing(absorbDepth = 0)
+    db.addDocuments(fixture(400))
+    db.enableServing()
+    val qv = (0 until 64).map(i => math.sin(i * 0.4) / 5.0)
+    db.searchHits(qv, k = 5)
+    val flat = db.preparedForTest.get
+    assertLineageFree(flat, "flat")
+    val flatBytes = taskBytes(flat)
+    (0 until 3).foreach { i =>
+      db.addDocuments(fixture(400 + 20 * (i + 1)).filter($"doc_id" >= 400 + 20 * i))
+      db.searchHits(qv, k = 5) // adopts the commit as a chain layer
+    }
+    val chain = db.preparedForTest.get
+    assert(chain.chain.depth == 3 && chain.numBlocks > flat.numBlocks,
+      s"expected a 3-layer chain, got depth ${chain.chain.depth}")
+    assertLineageFree(chain, "chain")
+    val chainBytes = taskBytes(chain)
+    info(s"serialized served RDD: flat $flatBytes B, 3-upsert chain $chainBytes B")
+    assert(chainBytes - flatBytes <= 2048,
+      s"a 3-upsert chain's scan serializes to $chainBytes B vs flat's $flatBytes B")
+    db.disableServing()
+  }
 }

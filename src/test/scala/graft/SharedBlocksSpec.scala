@@ -182,4 +182,79 @@ class SharedBlocksSpec extends AnyFunSuite {
       "post-refresh served results must equal the Catalyst path on the same snapshot")
     db1.disableServing()
   }
+
+  // Served blocks are localCheckpoint'ed (no lineage to recompute them
+  // from), so their lifetime is the pin protocol's: these two specs pin
+  // a release deferred past an in-flight search, and a rebuild when a
+  // block is gone anyway.
+
+  private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+    r +: r.dependencies.flatMap(d => lineage(d.rdd))
+
+  test("a pinned scan outlives the commit that releases it, then frees its blocks") {
+    val dir = freshDir()
+    val db = VectorDB.openOrCreate(spark, dir, storage = VectorDB.StorageMor)
+    db.addDocuments(fixture(0 until 150))
+    db.enableServing()
+    val ps = db.preparedForTest.get
+    val v = db.preparedVersionForTest.get
+    val layerIds = lineage(ps.blocks).map(_.id).toSet & persistedIds
+    assert(layerIds.nonEmpty, "the served blocks must be persisted")
+    val q = graft.operators.Search.packQuery(qv).toArray
+    def ranked(hits: Array[graft.db.PreparedScan.Hit]): Seq[(Long, Int, String)] =
+      hits.toSeq.map(h => (h.id, h.hamming, h.doc))
+    val before = ranked(ps.topB(q, 40))
+
+    // a search that took the scan, then a commit through the same
+    // instance: the last reference goes, the unpersist must wait
+    assert(ps.tryPin())
+    db.addDocuments(fixture(150 until 160))
+    assert(BlockCache.refsFor(db.blockCacheKey, v) == 0, "the commit releases the scan")
+    assert(layerIds.subsetOf(persistedIds), "a pinned scan's blocks must stay resident")
+    val after = try ranked(ps.topB(q, 40)) finally ps.unpin()
+    assert(after == before, "the in-flight search must answer from the released blocks")
+    assert((layerIds & persistedIds).isEmpty,
+      "the blocks must be unpersisted once the last in-flight search ends")
+    assert(!ps.tryPin(), "a freed scan grants no new pin")
+
+    // the instance itself serves on from the new snapshot
+    val twin = VectorDB.openOrCreate(spark, dir, storage = VectorDB.StorageMor)
+    assert(db.searchHits(qv, k = 8) == twin.searchHits(qv, k = 8))
+    db.disableServing()
+  }
+
+  test("a search whose resident blocks were lost answers from a rebuilt tier") {
+    val dir = freshDir()
+    val db = VectorDB.openOrCreate(spark, dir, storage = VectorDB.StorageMor)
+      .incrementalServing(absorbDepth = 0)
+    db.addDocuments(fixture(0 until 200))
+    db.enableServing()
+    val twin = VectorDB.openOrCreate(spark, dir, storage = VectorDB.StorageMor)
+    def loseBlocks(which: Seq[org.apache.spark.rdd.RDD[_]] => Seq[org.apache.spark.rdd.RDD[_]]): Unit = {
+      val layers = lineage(db.preparedForTest.get.blocks)
+        .filter(r => persistedIds.contains(r.id)).sortBy(_.id)
+      which(layers).foreach(_.unpersist(blocking = true)) // behind the engine's back
+    }
+
+    // flat tier: every block gone
+    val flat = db.preparedForTest.get
+    loseBlocks(identity)
+    assert(db.searchHits(qv, k = 8) == twin.searchHits(qv, k = 8))
+    assert(!(db.preparedForTest.get eq flat), "the lost tier must be replaced")
+
+    // chain tier: the newest layer's blocks gone
+    db.addDocuments(fixture(200 until 230))
+    db.removeDocs(Seq(3L, 4L))
+    db.searchHits(qv, k = 8)
+    val chain = db.preparedForTest.get
+    assert(chain.chain.depth >= 1, "the commits must extend the served chain")
+    loseBlocks(_.takeRight(1))
+    assert(db.searchHits(qv, k = 8) == twin.searchHits(qv, k = 8))
+    assert(!(db.preparedForTest.get eq chain), "the lost chain must be replaced")
+    assert(BlockCache.liveEntriesFor(db.blockCacheKey.folder) == 1,
+      "only the rebuilt tier stays registered")
+    db.disableServing()
+  }
 }
